@@ -135,7 +135,7 @@ def _replayed_pipe(
     FINAL_STATE_SQL oracle shares the exact batching semantics."""
     log = derived_change_log(spark, sf_dir)
     root = _scratch_dir(f"cps-{prefix}-")
-    defaults = dict(num_buckets=16, salt_buckets=4)
+    defaults = dict(num_buckets=16)
     defaults.update(pipe_kwargs)
     pipe = CdcPipeline(
         spark,
@@ -213,7 +213,7 @@ def _shared_index(spark: SparkSession, sf_dir: str):
 
 def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the derived change log through the whole engine — validation →
-    quarantine → salted window-over-LSN LWW → fenced tombstone MERGE across four
+    quarantine → per-key max-LSN LWW → fenced tombstone MERGE across four
     out-of-order batches — and return the user-visible final state.
 
     This is the analogue of the reference's full bulk replay
@@ -323,7 +323,6 @@ def cdc_snapshot_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["doc_id"],
         quarantine_path=f"{root}/quarantine",
         num_buckets=16,
-        salt_buckets=4,
     )
     for b in (0, 1):
         pipe.apply_batch(
@@ -372,7 +371,6 @@ def cdc_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["doc_id"],
         quarantine_path=f"{root}/quarantine",
         num_buckets=16,
-        salt_buckets=4,
     )
 
     def audit(s, branch, result):
@@ -468,7 +466,6 @@ def cdc_replay_debezium(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["doc_id"],
         quarantine_path=f"{root}/quarantine",
         num_buckets=16,
-        salt_buckets=4,
     )
     for b in range(4):
         batch = parsed.filter(F.pmod(F.col("lsn"), F.lit(4)) == b)
@@ -496,7 +493,6 @@ def cdc_stream_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineage_path=f"{root}/lineage",
         changes_path=f"{root}/changes",
         num_buckets=16,
-        salt_buckets=4,
     )
     h = run_stream(
         spark, pipe, f"{root}/feed", f"{root}/ckpt",
@@ -528,7 +524,6 @@ def cdc_stream_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_schema=TOKENS_SCHEMA,
         key_cols=["doc_id"],
         num_buckets=16,
-        salt_buckets=4,
     )
     view = IncrementalAggView(
         spark, pipe.target, f"{root}/view",
@@ -564,7 +559,7 @@ def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latest VALID state with its LSN watermark (deleted keys absent)
     valid, _ = validate_events(log)
     early = valid.filter(F.pmod(F.col("lsn"), F.lit(4)) <= 1)
-    snap = lww_latest(early, ["doc_id"], salt_buckets=4).filter(
+    snap = lww_latest(early, ["doc_id"]).filter(
         F.col("op") != "D"
     ).withColumn("op", F.lit("I"))
 
@@ -575,7 +570,6 @@ def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_schema=TOKENS_SCHEMA,
         key_cols=["doc_id"],
         num_buckets=16,
-        salt_buckets=4,
     )
     pipe.apply_batch(snap, fence_token="handoff:snapshot")
     # live tail: the FULL feed (all four batches), overlapping the snapshot
@@ -621,7 +615,6 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_schema=TOKENS_SCHEMA,
         key_cols=["doc_id"],
         num_buckets=16,
-        salt_buckets=4,
     )
     b1 = log.filter(F.pmod(F.col("lsn"), F.lit(2)) == 0)
     b2 = (
@@ -1216,10 +1209,10 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_lww_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-over-LSN last-writer-wins over valid events (SURVEY §2.4 A1)."""
+    """Per-key max-LSN last-writer-wins over valid events (SURVEY §2.4 A1)."""
     log = derived_change_log(spark, sf_dir)
     valid, _ = validate_events(log)
-    win = lww_latest(valid, ["doc_id"], salt_buckets=4)
+    win = lww_latest(valid, ["doc_id"])
     return win.select("doc_id", "lsn", "op", _j("tokens"), "n_tok", "source")
 
 

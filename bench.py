@@ -5,7 +5,7 @@ Prints ONE JSON line:
    "sf": ..., "cpus": N, "cdc_events_per_sec": ...}
 
 The flagship number is the CDC replay: change-events/sec through the full engine
-(validate → quarantine → salted LWW → fenced tombstone MERGE → lineage), the
+(validate → quarantine → LWW → fenced tombstone MERGE → lineage), the
 sandbox stand-in for the 10^10-event replay throughput in BASELINE.json. Run
 tools/scale_bench.py for the N-vs-4N-cores scaling-efficiency evidence.
 """
@@ -47,7 +47,7 @@ def cdc_replay_single_batch(spark, sf_dir):
     pipe = CdcPipeline(
         spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
         quarantine_path=f"{root}/q", lineage_path=f"{root}/l",
-        num_buckets=16, salt_buckets=4,
+        num_buckets=16,
     )
     pipe.apply_batch(log, fence_token="bench:all")
     return pipe.final_state()
@@ -65,7 +65,7 @@ def cdc_replay_mor_single_batch(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="cps-benchmor-")
     pipe = CdcPipeline(
         spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=16, salt_buckets=4, strategy="mor",
+        num_buckets=16, strategy="mor",
     )
     pipe.apply_batch(log, fence_token="bench:all")
     return pipe.final_state()
@@ -85,7 +85,7 @@ def cdc_wap_replay_single_batch(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="cps-benchwap-")
     pipe = CdcPipeline(
         spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=16, salt_buckets=4,
+        num_buckets=16,
     )
     pipe.apply_batch_wap(log, fence_token="bench:wap",
                          audit=lambda s, br, r: True)

@@ -517,16 +517,16 @@ def cmd_lookup(args) -> dict:
     from pyspark.sql import functions as F
 
     from .lake import LakeTable
-    from .lake.merge import HIDDEN_DELETED, HIDDEN_LSN, read_for_keys
+    from .lake.merge import ALL_HIDDEN, HIDDEN_DELETED, read_for_keys
 
     spark = _spark("cps-lookup")
     t = LakeTable(args.table)
     got = read_for_keys(spark, t, args.key, version=args.version)
     if HIDDEN_DELETED in got.columns:
         got = got.filter(~F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
-        # drop ALL hidden engine columns (partial-mode tables also carry
-        # _colv/_dlsn — internal state must not leak into CLI output rows)
-        got = got.drop(*[c for c in got.columns if c.startswith("_")])
+    # drop the hidden engine columns only (partial-mode tables also carry
+    # _colv/_dlsn); a user column that happens to start with "_" stays
+    got = got.drop(*ALL_HIDDEN)
     rows = [r.asDict() for r in got.collect()]
     hits = {str(r[t.manifest().key_cols[0]]) for r in rows}
     return {"requested": len(args.key), "found": len(rows),
@@ -541,7 +541,7 @@ def cmd_scan(args) -> dict:
     from pyspark.sql.types import NumericType
 
     from .lake import LakeTable
-    from .lake.merge import HIDDEN_DELETED, HIDDEN_LSN
+    from .lake.merge import ALL_HIDDEN, HIDDEN_DELETED
 
     spark = _spark("cps-scan")
     t = LakeTable(args.table)
@@ -581,7 +581,7 @@ def cmd_scan(args) -> dict:
     df = t.read_where_all(spark, preds, version=m.version)
     if HIDDEN_DELETED in df.columns:
         df = df.filter(~F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
-        df = df.drop(*[c for c in df.columns if c.startswith("_")])
+    df = df.drop(*ALL_HIDDEN)
     rows = [r.asDict() for r in df.limit(args.limit).collect()]
     out["returned"] = len(rows)
     out["rows"] = rows

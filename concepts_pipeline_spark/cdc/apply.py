@@ -6,11 +6,12 @@ scripted bulk upsert → publish ids) collapsed into one declarative batch funct
 driven either by a bulk replay loop or by Structured Streaming ``foreachBatch``.
 
 Steps:
- 1. validate events (vectorized — column expressions by default, an Arrow pandas UDF
-    path for parity with the input_hint); malformed rows are appended to a quarantine
-    table (ref analogue: ConceptExtractor warn+drop, ConceptExtractor.scala:81-118 —
-    we keep the rejects queryable instead of just logging)
- 2. LWW per key over LSN (operators.lww, two-phase salted against hot keys)
+ 1. validate events (JVM column expressions, whole-stage-codegen'd); malformed rows
+    are appended to a quarantine table (ref analogue: ConceptExtractor warn+drop,
+    ConceptExtractor.scala:81-118 — we keep the rejects queryable instead of just
+    logging)
+ 2. LWW per key over LSN (operators.lww: one max_by hash aggregation whose map-side
+    partial combine reduces hot keys before the shuffle)
  3. fenced MERGE INTO the target LakeTable (lake.merge)
  4. per-bucket lineage/metrics rows appended to a lineage table
     (ref analogue: BulkUpdateFlow result classification + running totals,
@@ -21,7 +22,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -114,28 +114,6 @@ def valid_event_expr(
     )
 
 
-def make_validate_tokens_udf(vocab_size: int = VOCAB_SIZE):
-    """Arrow-vectorized pandas UDF token validation (input_hint parity path).
-
-    Batched columnar transfer; numpy per batch. The expression path above is faster
-    (stays in the JVM) — this exists for the UDF-mandated variant and as the template
-    for validations that outgrow SQL expressions.
-    """
-    import numpy as np
-
-    @F.pandas_udf(BooleanType())
-    def tokens_valid(tokens: pd.Series, n_tok: pd.Series) -> pd.Series:
-        out = np.zeros(len(tokens), dtype=bool)
-        for i, (arr, n) in enumerate(zip(tokens.values, n_tok.values)):
-            if arr is None or n is None or len(arr) == 0 or len(arr) != n:
-                continue
-            a = np.asarray(arr)
-            out[i] = bool(((a >= 0) & (a < vocab_size)).all())
-        return pd.Series(out)
-
-    return tokens_valid
-
-
 def validate_events(
     batch: DataFrame, vocab_size: int = VOCAB_SIZE
 ) -> tuple[DataFrame, DataFrame]:
@@ -219,7 +197,6 @@ class CdcPipeline:
         lineage_path: str | None = None,
         changes_path: str | None = None,
         num_buckets: int = 16,
-        salt_buckets: int = 8,
         update_mode: str = "replace",
         strategy: str = "cow",
         array_union_cols: list[str] | None = None,
@@ -231,7 +208,6 @@ class CdcPipeline:
     ):
         self.spark = spark
         self.key_cols = key_cols
-        self.salt_buckets = salt_buckets
         self.update_mode = update_mode
         self.strategy = strategy
         # MoR write amplification is deferred, not free: without maintenance,
@@ -478,7 +454,6 @@ class CdcPipeline:
                 self.key_cols,
                 lsn_col=self.lsn_col,
                 op_col=self.op_col,
-                salt_buckets=self.salt_buckets,
             )
             source = deduped.drop("event_ts")
         stats = merge_into(

@@ -5,7 +5,7 @@ DuckDB on the same parquet inputs. The synthetic generator (generator.py) uses
 xxhash64 and therefore cannot be re-expressed in DuckDB; this module instead derives
 a change feed from ``events.parquet`` with *pure arithmetic* — every expression here
 has a byte-identical DuckDB equivalent (see ``LOG_CTE_SQL``), so the entire engine
-(validation → quarantine → window-over-LSN LWW → tombstone MERGE) can be verified
+(validation → quarantine → per-key max-LSN LWW → tombstone MERGE) can be verified
 end-to-end against a declarative SQL oracle.
 
 Mapping (the analogue of the reference's SQS change events,

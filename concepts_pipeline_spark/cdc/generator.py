@@ -9,10 +9,10 @@ out to 10^10 rows on a cluster exactly as written (generation is embarrassingly
 parallel; no shuffle until the optional disorder sort).
 
 Feed properties (each exercises an engine behavior):
-- multiple events per key, out of LSN order within files  → window-over-LSN LWW
+- multiple events per key, out of LSN order within files  → per-key max-LSN LWW
 - update chains ending in delete; delete-then-reinsert    → MERGE delete branch
 - exact duplicate events redelivered in a *later* batch   → idempotent apply / fencing
-- Zipf-ish skewed keys (hot doc_ids)                      → salted two-phase LWW
+- Zipf-ish skewed keys (hot doc_ids)                      → map-side partial LWW
 - a malformed fraction (n_tok mismatch, null tokens on U,
   out-of-vocab token)                                     → quarantine
 """

@@ -1003,8 +1003,6 @@ def read_for_keys_df(
     min/max stat pruning needs driver-side key values and is deliberately
     skipped here — bucket pruning alone bounds the read, and the semi-join
     discards non-matches before any downstream work."""
-    from ..operators.lww import lww_latest as _lww
-
     m = table.manifest(version)
     probe = keys_df.select(*m.key_cols).distinct()
     buckets = {
@@ -1036,8 +1034,6 @@ def read_for_keys(
     surviving files are scanned, with a residual IN filter. MoR deltas in the
     touched buckets are LWW-resolved."""
     from pyspark.sql.types import StringType
-
-    from ..operators.lww import lww_latest
 
     m = table.manifest(version)
     if not keys:
@@ -1216,7 +1212,6 @@ def compact(
     winner's manifest (same discipline as merge_into — a concurrent DML or
     view-refresh commit landing mid-compaction must not surface as an error
     for maintenance work). Returns the number of compacted buckets."""
-    from ..operators.lww import lww_latest
     from .table import CommitConflict
 
     attempt = 0
@@ -1298,7 +1293,6 @@ def compact_tiered(
     """
     import math
 
-    from ..operators.lww import lww_latest
     from .table import CommitConflict
 
     fanout = max(fanout, 2)  # log-base of the tier function

@@ -3,34 +3,23 @@
 The reference deduplicates by arrival order with a mutable HashSet
 (ref: aggregator/src/main/scala/weco/concepts/aggregator/ConceptsAggregator.scala:110-118
 — first-writer-wins, hash-collision-lossy). Ours is stronger and deterministic:
-row_number over ``Window.partitionBy(key).orderBy(lsn DESC, tiebreak)`` == 1.
+per key, the row that is greatest under a total order wins.
 
-Tie-break for same-LSN duplicates (at-least-once redelivery): op precedence
-(delete outranks upsert, so a racing D|U at the same LSN resolves deterministically),
-then a stable hash of the whole row. Total order ⇒ same winner on every replay.
+Total order: highest LSN first; for same-LSN duplicates (at-least-once
+redelivery) delete outranks upsert, so a racing D|U at the same LSN resolves
+deterministically; then a stable hash of the whole row. Total order ⇒ same
+winner on every replay.
 
-Skew: a window shuffles all rows of a key to one partition; Zipf-hot keys make that
-partition the straggler. ``lww_latest`` therefore supports two-phase (salted) reduction:
-phase 1 picks a winner per (key, salt) — ≤S rows per key survive — phase 2 picks the
-final winner per key. Combined with AQE skew handling this bounds any single task's
-input at ~1/S of the hottest key.
+Skew: the fold is one ``max_by`` hash aggregation, which Spark plans with a
+map-side partial aggregate — every hot key is reduced inside each input
+partition before the shuffle, so no task receives more than one partial winner
+per key per input partition (see SCALING.md, tests/test_skew.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _order_cols(lsn_col: str, op_col: str | None, delete_op: str, cols: list[str]):
-    order = [F.col(lsn_col).desc()]
-    if op_col is not None:
-        # delete outranks upsert at the same LSN — deterministic conflict resolution
-        order.append(
-            F.when(F.col(op_col) == delete_op, F.lit(0)).otherwise(F.lit(1)).asc()
-        )
-    order.append(F.xxhash64(*[F.col(c) for c in cols]).asc())
-    return order
 
 
 def lww_latest(
@@ -39,80 +28,25 @@ def lww_latest(
     lsn_col: str = "lsn",
     op_col: str | None = "op",
     delete_op: str = "D",
-    salt_buckets: int = 0,
-    method: str = "agg",
 ) -> DataFrame:
-    """Keep exactly one row per key: the highest-LSN row under the total order above.
+    """Keep exactly one row per key: the greatest row under the total order above.
 
-    method='agg' (default): a single ``max_by`` hash aggregation. Spark plans it
-    with a map-side partial aggregate, so every hot key is reduced inside each
-    input partition *before* the shuffle — the skew story at 10^10 events without
-    any manual salting, and no sort at all. The ordering struct
-    (lsn, delete-outranks-upsert, ~rowhash) reproduces the window's total order
-    exactly (bitwise_not makes "min hash wins" a max, overflow-free under ANSI).
-
-    method='window': the row_number formulation; salt_buckets > 1 adds the
-    two-phase salted reduction (kept for comparison/debug — agg supersedes it).
+    A single ``max_by`` hash aggregation, no sort. The ordering struct
+    (lsn, delete-outranks-upsert, ~rowhash) encodes the total order
+    (bitwise_not makes "min hash wins" a max, overflow-free under ANSI).
     """
-    if method == "agg":
-        cols = df.columns
-        order_struct = F.struct(
-            F.col(lsn_col).alias("l"),
-            (
-                F.when(F.col(op_col) == delete_op, F.lit(1)).otherwise(F.lit(0))
-                if op_col is not None
-                else F.lit(0)
-            ).alias("r"),
-            F.bitwise_not(F.xxhash64(*[F.col(c) for c in cols])).alias("h"),
-        )
-        winner = F.max_by(F.struct(*[F.col(c) for c in cols]), order_struct)
-        return df.groupBy(*key_cols).agg(winner.alias("__w")).select("__w.*")
-    if method == "pandas":
-        # Arrow-batched applyInPandas per-key reduce (input_hint parity path):
-        # the same total order evaluated in numpy/pandas per group. Slower than
-        # 'agg' (no map-side combine, Python round-trip) — exists as the template
-        # for reductions that outgrow expressions. The row-hash residual
-        # tiebreak is computed Spark-side (xxhash64 has no Python twin) and
-        # carried into the group as __h, so equal-(lsn, op) duplicates with
-        # different payloads resolve to the SAME winner as the other methods.
-        import pandas as pd
-
-        cols = list(df.columns)
-        has_op = op_col is not None
-        tagged = df.withColumn(
-            "__h", F.bitwise_not(F.xxhash64(*[F.col(c) for c in cols]))
-        )
-
-        def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-            rank = (
-                (pdf[op_col] == delete_op).astype(int)
-                if has_op
-                else pd.Series(0, index=pdf.index)
-            )
-            order = pd.DataFrame({"l": pdf[lsn_col], "r": rank, "h": pdf["__h"]})
-            idx = order.sort_values(
-                ["l", "r", "h"], ascending=[False, False, False]
-            ).index[0]
-            return pdf.loc[[idx], cols]
-
-        return tagged.groupBy(*key_cols).applyInPandas(pick, schema=df.schema)
-
-    order = _order_cols(lsn_col, op_col, delete_op, df.columns)
-    if salt_buckets and salt_buckets > 1:
-        salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets))
-        w1 = Window.partitionBy(*key_cols, "__salt").orderBy(*order)
-        df = (
-            df.withColumn("__salt", salt)
-            .withColumn("__rn", F.row_number().over(w1))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__salt")
-        )
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    cols = df.columns
+    order_struct = F.struct(
+        F.col(lsn_col).alias("l"),
+        (
+            F.when(F.col(op_col) == delete_op, F.lit(1)).otherwise(F.lit(0))
+            if op_col is not None
+            else F.lit(0)
+        ).alias("r"),
+        F.bitwise_not(F.xxhash64(*[F.col(c) for c in cols])).alias("h"),
     )
+    winner = F.max_by(F.struct(*[F.col(c) for c in cols]), order_struct)
+    return df.groupBy(*key_cols).agg(winner.alias("__w")).select("__w.*")
 
 
 # sentinel ordering floor for barrier comparisons: far below any real LSN but

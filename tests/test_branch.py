@@ -223,7 +223,6 @@ def _wap_pipe(spark, tmp_path, **kw) -> CdcPipeline:
         key_cols=["doc_id"],
         quarantine_path=str(tmp_path / "quarantine"),
         num_buckets=8,
-        salt_buckets=4,
         **kw,
     )
 

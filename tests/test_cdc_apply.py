@@ -114,7 +114,6 @@ def test_replay_matches_oracle(spark, change_log, tmp_path):
         quarantine_path=str(tmp_path / "quarantine"),
         lineage_path=str(tmp_path / "lineage"),
         num_buckets=8,
-        salt_buckets=4,
     )
     total_in = 0
     for b in range(4):
@@ -164,7 +163,6 @@ def test_on_reject_fail_aborts_batch_without_commit(spark, change_log, tmp_path)
         quarantine_path=str(tmp_path / "quarantine"),
         lineage_path=str(tmp_path / "lineage"),
         num_buckets=4,
-        salt_buckets=2,
     )
     v0 = pipe.target.current_version()
     # the generated log's batch 0 contains malformed events (malformed_pct=5)
@@ -205,7 +203,7 @@ def test_quarantine_redrive_recovers_without_zombies(spark, tmp_path):
            "n_tok int, source string")
     pipe = CdcPipeline(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"],
-        quarantine_path=str(tmp_path / "q"), num_buckets=4, salt_buckets=2,
+        quarantine_path=str(tmp_path / "q"), num_buckets=4,
     )
     big = 60_000  # out of the default 50257 vocab, inside the doubled one
     pipe.apply_batch(spark.createDataFrame([
@@ -241,7 +239,7 @@ def test_null_op_event_is_quarantined_not_applied(spark, tmp_path):
            "n_tok int, source string")
     pipe = CdcPipeline(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"],
-        quarantine_path=str(tmp_path / "q"), num_buckets=4, salt_buckets=2,
+        quarantine_path=str(tmp_path / "q"), num_buckets=4,
     )
     res = pipe.apply_batch(spark.createDataFrame([
         (1, "I", "a", [1], 1, "s"),

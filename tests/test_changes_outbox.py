@@ -39,7 +39,6 @@ def make_pipe(spark, tmp_path):
         lineage_path=str(tmp_path / "l"),
         changes_path=str(tmp_path / "c"),
         num_buckets=4,
-        salt_buckets=2,
     )
 
 

@@ -153,7 +153,7 @@ def test_cli_rollback_and_stats(spark, tmp_path, capsys):
     LOG = ("lsn long, op string, doc_id string, tokens array<int>, "
            "n_tok int, source string")
     pipe = CdcPipeline(spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"],
-                       num_buckets=2, salt_buckets=2)
+                       num_buckets=2)
     pipe.apply_batch(
         spark.createDataFrame([(1, "I", "a", [1], 1, "s")], LOG), "c:1")
     v1 = pipe.target.current_version()
@@ -180,7 +180,7 @@ def test_cli_branch_lifecycle(spark, tmp_path, capsys):
     LOG = ("lsn long, op string, doc_id string, tokens array<int>, "
            "n_tok int, source string")
     pipe = CdcPipeline(spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"],
-                       num_buckets=2, salt_buckets=2)
+                       num_buckets=2)
     pipe.apply_batch(
         spark.createDataFrame([(1, "I", "a", [1], 1, "s")], LOG), "c:1")
     table = str(tmp_path / "t")
@@ -470,3 +470,38 @@ def test_cli_replay_partial_update_mode(spark, tmp_path, capsys):
         assert len(out["batches"]) == 3
         states[strat] = out["final_rows"]
     assert states["cow"] == states["mor"] > 0
+
+
+def test_cli_hides_only_engine_columns(spark, tmp_path, capsys):
+    """lookup/scan drop the engine's hidden columns, not every "_" column: a
+    user column named _score must survive (partial-mode MoR carries all four
+    hidden columns)."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from concepts_pipeline_spark.cdc.apply import CdcPipeline
+    from concepts_pipeline_spark.lake.merge import ALL_HIDDEN
+    from tests.test_cdc_apply import TARGET_SCHEMA
+
+    schema = StructType(
+        TARGET_SCHEMA.fields + [StructField("_score", DoubleType(), True)]
+    )
+    LOG = ("lsn long, op string, doc_id string, tokens array<int>, "
+           "n_tok int, source string, _score double")
+    table = str(tmp_path / "t")
+    pipe = CdcPipeline(spark, table, schema, ["doc_id"], num_buckets=2,
+                       update_mode="partial", strategy="mor")
+    pipe.apply_batch(spark.createDataFrame(
+        [(1, "I", "a", [1], 1, "s", 0.5), (2, "I", "b", [2], 1, "s", 1.5)],
+        LOG), "c:1")
+    pipe.apply_batch(spark.createDataFrame(
+        [(3, "U", "a", None, None, None, 2.5)], LOG), "c:2")
+
+    out = run(capsys, ["lookup", "--table", table, "--key", "a"])
+    assert out["found"] == 1
+    assert out["rows"][0]["_score"] == 2.5
+    assert out["rows"][0]["tokens"] == [1]
+    assert not set(ALL_HIDDEN) & set(out["rows"][0])
+    out = run(capsys, ["scan", "--table", table, "--where", "source:s"])
+    assert sorted(r["_score"] for r in out["rows"]) == [1.5, 2.5]
+    for r in out["rows"]:
+        assert not set(ALL_HIDDEN) & set(r)

@@ -31,7 +31,7 @@ def test_consolidation_preserves_state_and_spares_base(spark, tmp_path):
     byte-identical (same manifest paths) — the property the fixed-count
     compact() lacks."""
     mor = CdcPipeline(spark, str(tmp_path / "m"), SCHEMA, ["doc_id"],
-                      num_buckets=2, salt_buckets=2, strategy="mor")
+                      num_buckets=2, strategy="mor")
     # big first batch -> fold it to base via a full-ratio trip
     big = spark.createDataFrame(
         [(f"k{i}", i + 1, "I", [i], 1, "s") for i in range(400)], LOG)
@@ -65,7 +65,7 @@ def test_ratio_gate_folds_to_base(spark, tmp_path):
     """Once accumulated delta rows reach the base's, the bucket folds —
     the amortized-base-rewrite arm."""
     mor = CdcPipeline(spark, str(tmp_path / "m"), SCHEMA, ["doc_id"],
-                      num_buckets=2, salt_buckets=2, strategy="mor")
+                      num_buckets=2, strategy="mor")
     mor.apply_batch(spark.createDataFrame(
         [(f"k{i}", i + 1, "I", [i], 1, "s") for i in range(20)], LOG),
         fence_token="b0")
@@ -85,7 +85,7 @@ def test_tombstones_survive_consolidation(spark, tmp_path):
     """A delete consolidated into a merged delta must keep shadowing the
     base AND killing stale redeliveries (the merge discipline's contract)."""
     mor = CdcPipeline(spark, str(tmp_path / "m"), SCHEMA, ["doc_id"],
-                      num_buckets=1, salt_buckets=1, strategy="mor")
+                      num_buckets=1, strategy="mor")
     mor.apply_batch(spark.createDataFrame(
         [(f"k{i}", i + 1, "I", [i], 1, "s") for i in range(50)], LOG),
         fence_token="b0")
@@ -117,7 +117,7 @@ def test_auto_compact_tiered_replay_equals_plain(spark, tmp_path):
         spark, num_events=4000, num_keys=400, seed=21, num_batches=8
     ).persist()
     tiered = CdcPipeline(spark, str(tmp_path / "t"), SCHEMA, ["doc_id"],
-                         num_buckets=4, salt_buckets=2, strategy="mor",
+                         num_buckets=4, strategy="mor",
                          auto_compact_max_deltas=2,
                          auto_compact_mode="tiered")
     plain = make_pipe(spark, tmp_path, "mor", "p")

@@ -25,7 +25,7 @@ def log_df(spark):
 def replay(spark, tmp_path, feed, tag):
     pipe = CdcPipeline(
         spark, str(tmp_path / f"t-{tag}"), TARGET_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
     pipe.apply_batch(feed, fence_token=f"{tag}:all")
     return engine_state(pipe.final_state())
@@ -70,7 +70,7 @@ def test_streaming_from_jsonl_feed(spark, tmp_path, log_df):
     schema = type(schema)([f for f in schema.fields if f.name != "batch_id"])
     pipe = CdcPipeline(
         spark, str(tmp_path / "t-stream"), TARGET_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
     h = run_stream(
         spark, pipe, f"{base}/jsonl", str(tmp_path / "ckpt"),
@@ -167,7 +167,7 @@ def test_debezium_feed_matches_parquet_batch_and_stream(spark, tmp_path, log_df)
     # streaming tail of the same dump through the exactly-once runner
     pipe = CdcPipeline(
         spark, str(tmp_path / "t-dbzs"), TARGET_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
     h = run_stream(
         spark, pipe, f"{base}/feed", str(tmp_path / "ckpt"),
@@ -256,7 +256,7 @@ def test_debezium_stream_through_wap_gate(spark, tmp_path, log_df):
 
     pipe = CdcPipeline(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
     audits = []
 

@@ -111,7 +111,7 @@ def test_rollback_rewinds_state_and_fences(spark, tmp_path):
     LOG = ("lsn long, op string, doc_id string, tokens array<int>, "
            "n_tok int, source string")
     pipe = CdcPipeline(spark, str(tmp_path / "rb"), TARGET_SCHEMA, ["doc_id"],
-                       num_buckets=2, salt_buckets=2)
+                       num_buckets=2)
     b1 = spark.createDataFrame([(1, "I", "a", [1], 1, "s")], LOG)
     b2 = spark.createDataFrame([(2, "U", "a", [9, 9], 2, "s"),
                                 (3, "I", "b", [3], 1, "s")], LOG)
@@ -230,7 +230,7 @@ def test_count_live_is_manifest_only_and_exact(spark, tmp_path):
 
     pipe = CdcPipeline(
         spark, str(tmp_path / "cl"), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
     pipe.apply_batch(
         batch([
@@ -253,7 +253,7 @@ def test_count_live_is_manifest_only_and_exact(spark, tmp_path):
 
     mor = CdcPipeline(
         spark, str(tmp_path / "ml"), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2, strategy="mor",
+        num_buckets=4, strategy="mor",
     )
     mor.apply_batch(batch([("a", 1, "I", [1], 1, "s")]), fence_token="b0")
     mor.apply_batch(batch([("a", 2, "U", [2], 1, "s")]), fence_token="b1")

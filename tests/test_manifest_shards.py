@@ -47,7 +47,6 @@ def test_sharded_commits_reuse_untouched_shards(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(lt, "INLINE_FILES_MAX", 4)
     pipe = CdcPipeline(
         spark, str(tmp_path / "t"), SCHEMA, ["doc_id"], num_buckets=32,
-        salt_buckets=2,
     )
     # batch 1: spread keys over many buckets -> many files -> sharded manifest
     b1 = batch(spark, range(100), [f"k{i}" for i in range(100)])
@@ -87,7 +86,6 @@ def test_expiry_reclaims_dead_shards(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(lt, "INLINE_FILES_MAX", 4)
     pipe = CdcPipeline(
         spark, str(tmp_path / "t"), SCHEMA, ["doc_id"], num_buckets=32,
-        salt_buckets=2,
     )
     for i in range(3):
         pipe.apply_batch(

@@ -305,7 +305,7 @@ def test_read_for_keys_df_set_oriented_lookup(spark, tmp_path):
 
     pipe = CdcPipeline(
         spark, str(tmp_path / "rk"), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2, strategy="mor",
+        num_buckets=4, strategy="mor",
     )
     rows = [(f"k{i}", i + 1, "I", [i], 1, "s") for i in range(50)]
     pipe.apply_batch(

@@ -37,7 +37,6 @@ def make_pipe(spark, tmp_path, strategy, name):
         target_schema=SCHEMA,
         key_cols=["doc_id"],
         num_buckets=4,
-        salt_buckets=2,
         strategy=strategy,
     )
 
@@ -147,10 +146,10 @@ def test_auto_compact_bounds_delta_files(spark, tmp_path):
                  [b, i], 2, "s") for i in range(6)]
 
     auto = CdcPipeline(spark, str(tmp_path / "auto"), TOKENS_SCHEMA,
-                       ["doc_id"], num_buckets=2, salt_buckets=2,
+                       ["doc_id"], num_buckets=2,
                        strategy="mor", auto_compact_max_deltas=2)
     plain = CdcPipeline(spark, str(tmp_path / "plain"), TOKENS_SCHEMA,
-                        ["doc_id"], num_buckets=2, salt_buckets=2,
+                        ["doc_id"], num_buckets=2,
                         strategy="mor")
     for b in range(6):
         batch = spark.createDataFrame(rows(b), LOG)

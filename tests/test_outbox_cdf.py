@@ -20,7 +20,7 @@ LOG = ("lsn long, op string, doc_id string, tokens array<int>, "
 def _pipe(spark, tmp_path):
     return CdcPipeline(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
 
 

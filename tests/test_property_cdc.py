@@ -70,7 +70,7 @@ def test_any_replay_matches_python_fold(spark, tmp_path_factory, evs, split, str
     pipe = CdcPipeline(
         spark, str(root / "t"), SCHEMA, ["doc_id"],
         quarantine_path=str(root / "q"),
-        num_buckets=2, salt_buckets=2, strategy=strategy,
+        num_buckets=2, strategy=strategy,
     )
     n_batches = max(split) + 1
     for b in range(n_batches):

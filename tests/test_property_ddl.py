@@ -42,7 +42,7 @@ def test_ddl_interleaved_replay_matches_python_fold(
     tmp = tmp_path_factory.mktemp("ddlprop")
     pipe = CdcPipeline(
         spark, str(tmp / "t"), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=2, salt_buckets=2,
+        num_buckets=2,
     )
     rows = []
     for i, (doc, op, toks, src) in enumerate(evs):

@@ -70,7 +70,7 @@ def test_index_and_view_match_python_fold_under_mor_compaction(
     tmp = tmp_path_factory.mktemp("derivedprop")
     pipe = CdcPipeline(
         spark, str(tmp / "t"), SCHEMA, ["doc_id"],
-        num_buckets=2, salt_buckets=2, strategy="mor",
+        num_buckets=2, strategy="mor",
     )
     ix = TokenIndex(
         spark, pipe.target, str(tmp / "ix"),

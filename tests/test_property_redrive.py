@@ -53,7 +53,7 @@ def test_redrive_equals_validity_at_apply_time(
     pipe = CdcPipeline(
         spark, str(root / "t"), SCHEMA, ["doc_id"],
         quarantine_path=str(root / "q"),
-        num_buckets=2, salt_buckets=2, vocab_size=SMALL_VOCAB,
+        num_buckets=2, vocab_size=SMALL_VOCAB,
     )
     for b in range(n_batches):
         batch = [r for i, r in enumerate(rows) if i % n_batches == b]

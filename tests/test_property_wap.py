@@ -45,7 +45,7 @@ def test_wap_interleaved_replay_matches_python_fold(
     pipe = CdcPipeline(
         spark, str(root / "t"), SCHEMA, ["doc_id"],
         quarantine_path=str(root / "q"),
-        num_buckets=2, salt_buckets=2,
+        num_buckets=2,
     )
     accepted: list = []
     n_batches = len(plan)

@@ -19,7 +19,7 @@ def _batch(spark, rows):
 def _pipe(spark, tmp_path, name="p"):
     return CdcPipeline(
         spark, str(tmp_path / name), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
 
 
@@ -321,7 +321,7 @@ def test_primary_compaction_is_empty_replica_commit(spark, tmp_path):
 
     pipe = CdcPipeline(
         spark, str(tmp_path / "pm"), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2, strategy="mor",
+        num_buckets=4, strategy="mor",
     )
     for b in range(3):
         pipe.apply_batch(

@@ -47,7 +47,6 @@ def make_pipe(spark, tmp_path):
         quarantine_path=str(tmp_path / "q"),
         lineage_path=str(tmp_path / "lineage"),
         num_buckets=8,
-        salt_buckets=4,
     )
 
 
@@ -118,7 +117,6 @@ def test_kill_and_resume_mor_with_compaction(spark, log_dir, tmp_path):
             key_cols=["doc_id"],
             quarantine_path=str(tmp_path / "q"),
             num_buckets=8,
-            salt_buckets=4,
             strategy="mor",
         )
 

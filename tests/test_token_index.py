@@ -24,7 +24,7 @@ def _batch(spark, rows):
 def _pipe(spark, tmp_path, name="t"):
     return CdcPipeline(
         spark, str(tmp_path / name), TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=4, salt_buckets=2,
+        num_buckets=4,
     )
 
 

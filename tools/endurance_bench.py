@@ -114,7 +114,7 @@ def worker(cpus: int, num_batches: int, strategy: str,
     root = tempfile.mkdtemp(prefix=f"cps-endurance-{strategy}-")
     pipe = CdcPipeline(
         spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=32, salt_buckets=8, strategy=strategy,
+        num_buckets=32, strategy=strategy,
         # fold a bucket when its delta pile passes 4 files: compaction cost is
         # INSIDE the timed loop — the flat-cost claim must include maintenance
         auto_compact_max_deltas=4 if strategy == "mor" else None,

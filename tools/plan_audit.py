@@ -44,6 +44,22 @@ def check(name: str, plan: str, pattern: str, must_match: bool = True) -> tuple:
     return (name, pattern, "PASS" if ok else "FAIL", ok)
 
 
+# run-to-run noise in explain output: expression ids, exchange plan ids
+# and temp-dir table paths; the checks above match the raw plan, only the text
+# written to PLANS.md is normalised, so two runs leave the file unchanged
+_NOISE = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"/tmp/[^\s,\]]+"), "/tmp/..."),
+]
+
+
+def normalise(plan: str) -> str:
+    for pat, repl in _NOISE:
+        plan = pat.sub(repl, plan)
+    return plan
+
+
 def main() -> None:
     spark = get_spark(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -417,7 +433,7 @@ def main() -> None:
             fh.write(f"| {name} | {verdict} |\n")
         fh.write("\n")
         for title, plan in sections:
-            fh.write(f"## {title}\n\n```\n{plan.strip()}\n```\n\n")
+            fh.write(f"## {title}\n\n```\n{normalise(plan).strip()}\n```\n\n")
 
     bad = [r for r in results if not r[3]]
     for name, pat, verdict, _ok in results:

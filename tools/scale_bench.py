@@ -136,7 +136,6 @@ def worker(cpus: int, num_batches: int, single_batch: bool = False,
         quarantine_path=f"{root}/quarantine",
         lineage_path=f"{root}/lineage",
         num_buckets=32,  # identical physical layout at every parallelism level
-        salt_buckets=8,
         strategy=strategy,
         update_mode="partial" if partial else "replace",
     )
@@ -144,7 +143,7 @@ def worker(cpus: int, num_batches: int, single_batch: bool = False,
     # ~10 s of one-time JVM compilation that is not steady-state throughput
     scratch = CdcPipeline(
         spark, f"{root}/warmup", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=8, salt_buckets=8,
+        num_buckets=8,
     )
     scratch.apply_batch(
         feed.filter(F.col("batch_id") == 0).drop("batch_id").limit(50_000),

@@ -60,7 +60,7 @@ def worker(cpus: int) -> None:
     # untimed: bulk replay -> the table the maintenance op will rewrite
     pipe = CdcPipeline(
         spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=NUM_BUCKETS, salt_buckets=8,
+        num_buckets=NUM_BUCKETS,
     )
     pipe.apply_batch(feed.drop("batch_id"), fence_token="bulk:0")
     t = pipe.target

@@ -114,7 +114,7 @@ def worker(cpus: int, inc_buckets: int) -> None:
     # ---- untimed setup: base replay (one bulk commit) + derived bootstrap
     pipe = CdcPipeline(
         spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=NUM_BUCKETS, salt_buckets=8,
+        num_buckets=NUM_BUCKETS,
     )
     pipe.apply_batch(feed.drop("batch_id"), fence_token="bulk:0")
 

@@ -89,7 +89,7 @@ def prep_worker(args) -> None:
     ).drop("batch_id")
     pipe = CdcPipeline(
         spark, f"{ROOT}/tokens", TOKENS_SCHEMA, ["doc_id"],
-        num_buckets=NUM_BUCKETS, salt_buckets=8,
+        num_buckets=NUM_BUCKETS,
     )
     pipe.apply_batch(feed, fence_token="bulk:0")
     v1 = pipe.target.current_version()

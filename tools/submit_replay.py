@@ -85,7 +85,6 @@ def main() -> None:
         quarantine_path=f"{root}/quarantine",
         lineage_path=f"{root}/lineage",
         num_buckets=32,
-        salt_buckets=8,
         strategy=args.strategy,
     )
     t0 = time.time()
