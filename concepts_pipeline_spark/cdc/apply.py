@@ -34,7 +34,13 @@ from pyspark.sql.types import (
 )
 
 from ..lake import LakeTable, merge_into, MergeStats
-from ..lake.merge import ALL_HIDDEN, HIDDEN_COLV, HIDDEN_DELETED, HIDDEN_DLSN, HIDDEN_LSN
+from ..lake.table import (
+    HIDDEN_COLV,
+    HIDDEN_DELETED,
+    HIDDEN_DLSN,
+    HIDDEN_LSN,
+    visible_fields,
+)
 from ..operators.lww import lww_fold_partial, lww_latest
 from .generator import VOCAB_SIZE
 
@@ -204,7 +210,7 @@ class CdcPipeline:
         lsn_col: str = "lsn",
         op_col: str = "op",
         auto_compact_max_deltas: int | None = None,
-        auto_compact_mode: str = "full",
+        auto_compact_mode: str = "tiered",
     ):
         self.spark = spark
         self.key_cols = key_cols
@@ -218,15 +224,14 @@ class CdcPipeline:
         # batch compacts)
         if auto_compact_max_deltas is not None and strategy != "mor":
             raise ValueError("auto_compact_max_deltas requires strategy='mor'")
-        # 'full' folds any bucket past the delta-count threshold back to base
-        # (read-optimal, but per-batch cost grows with bucket size — O(table²)
-        # total I/O over a long replay); 'tiered' uses size-tiered delta
-        # consolidation with ratio-gated base folds (lake/merge.compact_tiered:
-        # O(log) write amplification, bounded read fan-in) — the mode the
-        # 10^10-event replay should run
-        if auto_compact_mode not in ("full", "tiered"):
-            raise ValueError("auto_compact_mode must be 'full' or 'tiered'")
-        self.auto_compact_mode = auto_compact_mode
+        # the one automatic mode is size-tiered delta consolidation with
+        # ratio-gated base folds (lake/merge.compact_tiered: O(log) write
+        # amplification, bounded read fan-in). A fixed-count fold of every
+        # bucket past the threshold makes per-batch cost grow with bucket
+        # size (O(table²) total I/O over a long replay); the fixed-count
+        # compact() stays an explicit maintenance call
+        if auto_compact_mode != "tiered":
+            raise ValueError("auto_compact_mode must be 'tiered'")
         self.auto_compact_max_deltas = auto_compact_max_deltas
         self.array_union_cols = array_union_cols
         self.vocab_size = vocab_size
@@ -360,7 +365,9 @@ class CdcPipeline:
             valid_event_expr(
                 vocab_size=self.vocab_size,
                 n_tok_col="n_tok" if "n_tok" in batch.columns else None,
-                partial=(_update_mode or self.update_mode) == "partial",
+                # the TABLE's mode: a sync's per-call 'replace' override
+                # still lands sparse NULLs on a column-level table
+                partial=self.update_mode == "partial",
             ),
         )
 
@@ -500,7 +507,7 @@ class CdcPipeline:
             self.lineage.append_rows(rows, fence_token=f"{fence_token}:l")
 
         if self.auto_compact_max_deltas is not None and not stats.skipped:
-            from ..lake.merge import compact, compact_tiered
+            from ..lake.merge import compact_tiered
             from ..lake.table import CommitConflict
 
             # opportunistic maintenance: the batch's merge is already
@@ -508,16 +515,10 @@ class CdcPipeline:
             # (DML, view/index refresher) must NOT surface as a failure of a
             # successfully applied batch — the next batch retries compaction
             try:
-                if self.auto_compact_mode == "tiered":
-                    compact_tiered(
-                        self.spark, self.target,
-                        fanout=self.auto_compact_max_deltas,
-                    )
-                else:
-                    compact(
-                        self.spark, self.target,
-                        max_delta_files_per_bucket=self.auto_compact_max_deltas,
-                    )
+                compact_tiered(
+                    self.spark, self.target,
+                    fanout=self.auto_compact_max_deltas,
+                )
             except CommitConflict:
                 pass
         return ApplyResult(stats=stats, rows_in=rows_in, quarantined=n_rejects)
@@ -705,8 +706,8 @@ class CdcPipeline:
             # them on every synced key); dump-only columns evolve the table
             # through the merge like any batch's would
             visible = [
-                f.name for f in m.schema.fields
-                if not f.name.startswith("_") and f.name not in key_cols
+                f.name for f in visible_fields(m.schema)
+                if f.name not in key_cols
             ]
             payload_cols = visible + [
                 c for c in snapshot.columns
@@ -808,8 +809,7 @@ class CdcPipeline:
         live = df.filter(~F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
         if include_hidden:
             return live
-        hidden = set(ALL_HIDDEN)
-        return live.select(*[c for c in live.columns if c not in hidden])
+        return live.select(*[f.name for f in visible_fields(live.schema)])
 
 
 def CHANGE_BATCH_FIELDS_HINT(

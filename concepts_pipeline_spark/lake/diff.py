@@ -24,9 +24,14 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .merge import HIDDEN_DELETED
 from .schema import conform
-from .table import LakeTable, Manifest
+from .table import (
+    ALL_HIDDEN,
+    HIDDEN_DELETED,
+    LakeTable,
+    Manifest,
+    visible_fields,
+)
 
 
 # operations whose commits are logical no-ops by construction: their file
@@ -97,12 +102,7 @@ def read_live(
 
         # same visible-columns contract as the non-empty path (hidden engine
         # columns are dropped below; the empty frame must match)
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [f for f in m.schema.fields if not f.name.startswith("_")]
-            ),
-        )
+        return spark.createDataFrame([], StructType(visible_fields(m.schema)))
     # ONE resolution helper for the whole engine: the clean/dirty bucket
     # split + LWW fold lives in LakeTable._read_files_resolved (shared with
     # read_where/read_where_all) so the two paths can never drift on what
@@ -110,8 +110,7 @@ def read_live(
     df = table._read_files_resolved(spark, m, files)
     if HIDDEN_DELETED in df.columns:
         df = df.filter(~F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
-    drop = [c for c in df.columns if c.startswith("_")]
-    return df.drop(*drop)
+    return df.drop(*ALL_HIDDEN)
 
 
 def live_pair(
@@ -139,9 +138,7 @@ def live_pair(
         buckets = _changed_buckets(m_from, m_to)
     # user-visible schema: the stored table schema minus hidden engine columns
     # (_lsn / _deleted) — a diff is a statement about logical rows
-    visible = StructType(
-        [f for f in m_to.schema.fields if not f.name.startswith("_")]
-    )
+    visible = StructType(visible_fields(m_to.schema))
 
     old = read_live(spark, table, m_from, buckets)
     # a rename committed between the two snapshots: the from-side reads under

@@ -37,18 +37,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .schema import conform, evolve_schema
-from .table import DataFileEntry, LakeTable, Manifest, bucket_expr
+from .table import (  # the HIDDEN_* names stay importable from here
+    ALL_HIDDEN,
+    HIDDEN_COLV,
+    HIDDEN_DELETED,
+    HIDDEN_DLSN,
+    HIDDEN_LSN,
+    DataFileEntry,
+    LakeTable,
+    Manifest,
+    bucket_expr,
+)
 
 ACTION_COL = "__action"
 BUCKET_COL = "__bucket"
-# hidden columns for LSN-aware CDC merges (see merge_into(lsn_col=...))
-HIDDEN_LSN = "_lsn"
-HIDDEN_DELETED = "_deleted"
-# hidden columns for COLUMN-level CDC merges (update_mode='partial'): the
-# per-column version vector and the persisted delete barrier
-HIDDEN_COLV = "_colv"
-HIDDEN_DLSN = "_dlsn"
-ALL_HIDDEN = (HIDDEN_LSN, HIDDEN_DELETED, HIDDEN_COLV, HIDDEN_DLSN)
 
 
 _MIN_LSN = -(2**63) + 1
@@ -971,20 +973,13 @@ def rescale_buckets(
     new_base.num_buckets = new_num_buckets
     sid = table._current_schema_id(new_base)
     files = table.write_data_files(merged, new_base, sid, kind="base")
-    out = Manifest(
-        version=m.version + 1,
-        schema_json=m.schema_json,
-        key_cols=m.key_cols,
-        num_buckets=new_num_buckets,
-        files=files,
-        schemas=new_base.schemas,
-        fence_tokens=list(m.fence_tokens),
+    # new_base carries the new bucket count; commit() stamps committed_at_ms,
+    # which version_as_of needs to place this snapshot in time
+    return table.commit(
+        new_base, files,
         summary={"operation": "rescale", "from": m.num_buckets,
                  "to": new_num_buckets, "rows": sum(f.rows for f in files)},
-        properties=m.properties,
     )
-    table._write_manifest(out)
-    return out
 
 
 def read_for_keys_df(
@@ -1264,9 +1259,9 @@ def compact_tiered(
     every bucket every ``threshold+1`` batches and :func:`compact` rewrites
     the bucket's FULL base each time — amortized per-batch write cost grows
     linearly with table size, i.e. O(table²) total I/O over a long replay
-    (measured: tools/endurance_bench.py's compaction spikes 15.7s → 38.0s →
-    52.9s as the table grew under constant 1M-event batches). Two-level
-    policy instead:
+    (measured by ``tools/scale_bench.py --scenario endurance``: compaction
+    spikes 15.7s → 38.0s → 52.9s as the table grew under constant 1M-event
+    batches). Two-level policy instead:
 
     - **consolidate**: within a bucket, group delta files into size tiers
       (``tier = floor(log_fanout(rows))``); any tier holding > ``fanout``

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .merge import HIDDEN_LSN, MergeStats, merge_into
-from .table import CommitConflict, LakeTable, Manifest
+from .table import CommitConflict, LakeTable, Manifest, visible_fields
 
 DML_LSN_COL = "__dml_lsn"
 
@@ -117,9 +117,7 @@ def delete_where(
         predicate = F.expr(predicate)
 
     def build(m: Manifest) -> DataFrame:
-        visible = [
-            f.name for f in m.schema.fields if not f.name.startswith("_")
-        ]
+        visible = [f.name for f in visible_fields(m.schema)]
         payload = [c for c in visible if c not in m.key_cols]
         matched = _live_rows(spark, table, m).filter(predicate)
         return matched.select(
@@ -156,9 +154,7 @@ def update_where(
     }
 
     def build(m: Manifest) -> DataFrame:
-        visible = [
-            f.name for f in m.schema.fields if not f.name.startswith("_")
-        ]
+        visible = [f.name for f in visible_fields(m.schema)]
         bad = set(exprs) & set(m.key_cols)
         if bad:
             raise ValueError(f"cannot SET key column(s) {sorted(bad)}")

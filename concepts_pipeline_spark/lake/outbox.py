@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, LongType, StructField, StructType
 
 from .diff import snapshot_diff
-from .table import CommitConflict, LakeTable, fence_cursor
+from .table import CommitConflict, LakeTable, fence_cursor, visible_fields
 
 FENCE_PREFIX = "obx:"
 
@@ -50,8 +50,8 @@ class CdfOutbox:
         m = primary.manifest()
         self.key_cols = list(m.key_cols)
         self.payload_cols = [
-            f.name for f in m.schema.fields
-            if f.name not in m.key_cols and not f.name.startswith("_")
+            f.name for f in visible_fields(m.schema)
+            if f.name not in m.key_cols
         ] if include_payload else []
         schema = StructType(
             [StructField(k, m.schema[k].dataType, True) for k in self.key_cols]

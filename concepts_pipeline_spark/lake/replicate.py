@@ -32,7 +32,7 @@ from pyspark.sql.types import StructType
 
 from .diff import snapshot_diff
 from .merge import merge_into
-from .table import LakeTable
+from .table import HIDDEN_DELETED, HIDDEN_LSN, LakeTable, visible_fields
 
 FENCE_PREFIX = "repl:"
 
@@ -51,10 +51,7 @@ class Replica:
         self.primary = primary
         m = primary.manifest()
         # logical schema only — the replica keeps its own hidden CDC columns
-        visible = StructType(
-            [f for f in m.schema.fields if not f.name.startswith("_")]
-        )
-        from .merge import HIDDEN_DELETED, HIDDEN_LSN
+        visible = StructType(visible_fields(m.schema))
         from pyspark.sql.types import BooleanType, LongType, StructField
 
         physical = StructType(
@@ -292,8 +289,7 @@ class Replica:
         def visible(schema):
             return sorted(
                 (f.name, f.dataType.simpleString())
-                for f in schema.fields
-                if not f.name.startswith("_")
+                for f in visible_fields(schema)
             )
 
         if visible(m_p.schema) != visible(m_r.schema):
@@ -354,8 +350,6 @@ class Replica:
             live = live.filter(
                 bucket_expr(m_r.key_cols, rnb).isin(*[int(b) for b in tb_set])
             )
-        from .merge import HIDDEN_DELETED, HIDDEN_LSN
-
         rows = live.select(
             "*",
             F.lit(nxt).cast("long").alias(HIDDEN_LSN),
@@ -401,7 +395,7 @@ def logical_digest(spark: SparkSession, table: LakeTable, version: int | None = 
 
     m = table.manifest(version)
     live = read_live(spark, table, m, {f.bucket for f in m.files})
-    payload = sorted(c for c in live.columns if not c.startswith("_"))
+    payload = sorted(live.columns)  # read_live already dropped ALL_HIDDEN
     # bit_xor is a partial-aggregating O(1)-state fold — never materializes
     # the hash stream (a collect_list fold would hold O(rows) in one buffer)
     agg = live.agg(

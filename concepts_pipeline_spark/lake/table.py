@@ -44,6 +44,23 @@ BRANCH_DIR = "_branches"
 TAG_DIR = "_tags"
 DATA_DIR = "data"
 
+# The engine's own per-row state columns: LSN-aware CDC merges stamp the
+# last-applied LSN and the tombstone flag; column-level (partial-mode) merges
+# add the per-column version vector and the persisted delete barrier. Every
+# other column is user data, whatever its name (a user column may start with
+# "_").
+HIDDEN_LSN = "_lsn"
+HIDDEN_DELETED = "_deleted"
+HIDDEN_COLV = "_colv"
+HIDDEN_DLSN = "_dlsn"
+ALL_HIDDEN = (HIDDEN_LSN, HIDDEN_DELETED, HIDDEN_COLV, HIDDEN_DLSN)
+
+
+def visible_fields(schema: StructType) -> list[StructField]:
+    """The user-visible fields of a physical schema: all but ``ALL_HIDDEN``."""
+    return [f for f in schema.fields if f.name not in ALL_HIDDEN]
+
+
 # Sharded manifests: above this file count the root manifest stores
 # content-addressed shard refs instead of the inline file list, and a commit
 # rewrites ONLY the shards whose buckets changed. At 2^16 buckets × several
@@ -405,7 +422,7 @@ class LakeTable:
             raise ValueError(f"cannot rename key column {old!r}")
         if old.startswith("_") or new.startswith("_"):
             raise ValueError("cannot rename hidden engine columns")
-        if any(f.name == "_colv" for f in m.schema.fields):
+        if any(f.name == HIDDEN_COLV for f in m.schema.fields):
             # column-level (partial-mode) tables version each column in a
             # DATA map keyed by column NAME (_colv) — a metadata-only rename
             # cannot remap those keys, so every register for the renamed
@@ -1001,7 +1018,7 @@ class LakeTable:
         key — while clean buckets pass through without touching the
         aggregation (the read_merged split, applied to a pruned subset).
         No-op on pure-base subsets and tables without the hidden columns."""
-        from .merge import HIDDEN_LSN, resolve_rows
+        from .merge import resolve_rows
 
         dirty_buckets = {f.bucket for f in files if f.kind != "base"}
         if not dirty_buckets or HIDDEN_LSN not in {
@@ -1516,12 +1533,11 @@ def _parquet_stats(path: str, key_col: str, metric_cols: list[str] | None = None
 
 def _parquet_live_rows(path: str, md=None) -> int:
     """Non-tombstone rows of one data file (see _parquet_stats docstring)."""
-    DELETED = "_deleted"  # merge.HIDDEN_DELETED (merge imports table — no cycle)
     if md is None:
         md = pq.ParquetFile(path).metadata
     arrow_schema = md.schema.to_arrow_schema()
     try:
-        didx = arrow_schema.get_field_index(DELETED)
+        didx = arrow_schema.get_field_index(HIDDEN_DELETED)
     except Exception:
         didx = -1
     if didx < 0:
@@ -1541,7 +1557,7 @@ def _parquet_live_rows(path: str, md=None) -> int:
             break
     if decided:
         return live
-    col = pq.read_table(path, columns=[DELETED]).column(0)
+    col = pq.read_table(path, columns=[HIDDEN_DELETED]).column(0)
     import pyarrow.compute as pc
 
     return md.num_rows - pc.sum(

@@ -54,7 +54,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from .diff import live_pair
 from .merge import merge_into
-from .table import LakeTable
+from .table import LakeTable, visible_fields
 
 FENCE_PREFIX = "ivm:"
 
@@ -112,11 +112,7 @@ class IncrementalAggView:
             # unresolved old_<col> AnalysisException deep inside the first
             # refresh. With expand, columns name the EXPANSION's output — the
             # base schema cannot validate them, group_fields declares them.
-            visible = {
-                f.name
-                for f in base_schema.fields
-                if not f.name.startswith("_")
-            }
+            visible = {f.name for f in visible_fields(base_schema)}
             missing = [c for c in self.group_cols if c not in visible]
             missing += [s for s in self.sum_cols.values() if s not in visible]
             if missing:

@@ -1,8 +1,9 @@
 """Size-tiered MoR compaction (lake/merge.compact_tiered): consolidation
 must never change the visible state, must NOT rewrite the base while the
 delta pile is small relative to it (the O(table²) failure mode of the
-fixed-count trigger, measured in tools/endurance_bench.py), and must fold
-to base once delta volume reaches the ratio gate."""
+fixed-count trigger, measured by `tools/scale_bench.py --scenario
+endurance`), and must fold to base once delta volume reaches the ratio gate.
+Tiered is the only automatic mode (CdcPipeline(auto_compact_max_deltas=...))."""
 
 from __future__ import annotations
 
@@ -29,15 +30,21 @@ def test_consolidation_preserves_state_and_spares_base(spark, tmp_path):
     """A big base + a pile of small same-tier deltas: tiered compaction
     merges the pile into one delta per bucket and leaves every base file
     byte-identical (same manifest paths) — the property the fixed-count
-    compact() lacks."""
+    compact() lacks. The same holds for a pipeline's automatic compaction
+    with no mode given (tiered is the default and only mode)."""
     mor = CdcPipeline(spark, str(tmp_path / "m"), SCHEMA, ["doc_id"],
                       num_buckets=2, strategy="mor")
+    auto = CdcPipeline(spark, str(tmp_path / "a"), SCHEMA, ["doc_id"],
+                       num_buckets=2, strategy="mor",
+                       auto_compact_max_deltas=4)
     # big first batch -> fold it to base via a full-ratio trip
     big = spark.createDataFrame(
         [(f"k{i}", i + 1, "I", [i], 1, "s") for i in range(400)], LOG)
-    mor.apply_batch(big, fence_token="b0")
-    compact(spark, mor.target, max_delta_files_per_bucket=0)
+    for p in (mor, auto):
+        p.apply_batch(big, fence_token="b0")
+        compact(spark, p.target, max_delta_files_per_bucket=0)
     base0 = _base_paths(mor.target)
+    auto_base0 = _base_paths(auto.target)
     assert base0 and not _delta_files(mor.target)
 
     # five tiny batches (same size tier, > fanout=4) against the 400-row base
@@ -46,7 +53,10 @@ def test_consolidation_preserves_state_and_spares_base(spark, tmp_path):
             [(f"k{i}", 1000 + b * 10 + i, "U", [b, i], 2, "s")
              for i in range(6)], LOG)
         mor.apply_batch(small, fence_token=f"s{b}")
+        auto.apply_batch(small, fence_token=f"s{b}")
     before = state(mor.final_state())
+    assert _base_paths(auto.target) == auto_base0  # auto pass spared base
+    assert state(auto.final_state()) == before
     assert len(_delta_files(mor.target)) == 10  # 5 batches x 2 buckets
 
     r = compact_tiered(spark, mor.target, fanout=4)
@@ -136,7 +146,9 @@ def test_auto_compact_tiered_replay_equals_plain(spark, tmp_path):
 def test_mode_validation(spark, tmp_path):
     import pytest
 
-    with pytest.raises(ValueError, match="auto_compact_mode"):
-        CdcPipeline(spark, str(tmp_path / "x"), SCHEMA, ["doc_id"],
-                    strategy="mor", auto_compact_max_deltas=2,
-                    auto_compact_mode="nope")
+    # "full" (the fixed-count fold after every batch) is no longer a mode
+    for mode in ("nope", "full"):
+        with pytest.raises(ValueError, match="auto_compact_mode"):
+            CdcPipeline(spark, str(tmp_path / "x"), SCHEMA, ["doc_id"],
+                        strategy="mor", auto_compact_max_deltas=2,
+                        auto_compact_mode=mode)

@@ -436,8 +436,8 @@ def test_full_refresh_pinned_version_then_catch_up(spark, tmp_path):
     """Consistent bootstrap: full_refresh(version=v) snapshots a FIXED base
     version (the cursor becomes v even when the base head is ahead), and a
     subsequent refresh() folds exactly the v->head span — final state equals
-    the declarative recompute at head. This is the path scale_bench_view.py
-    times at the crossover commit size."""
+    the declarative recompute at head. This is the path
+    `tools/scale_bench.py --scenario view` times at the crossover commit size."""
     pipe = _pipe(spark, tmp_path)
     pipe.apply_batch(
         _batch(spark, [

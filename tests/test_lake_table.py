@@ -267,7 +267,7 @@ def test_timestamp_time_travel_and_history(spark, tmp_path):
     instant; history() reads the whole log from manifest headers only."""
     import time as _time
 
-    from concepts_pipeline_spark.lake.merge import merge_into
+    from concepts_pipeline_spark.lake.merge import merge_into, rescale_buckets
     from concepts_pipeline_spark.lake.table import LakeTable
     from pyspark.sql.types import (
         ArrayType, IntegerType, LongType, StringType, StructField, StructType,
@@ -286,6 +286,8 @@ def test_timestamp_time_travel_and_history(spark, tmp_path):
     _time.sleep(0.05)
     merge_into(spark, t, spark.createDataFrame([("b", [2], "U", 2)], ddl),
                fence_token="c2", lsn_col="lsn")
+    # a rescale is a commit like any other: stamped, so it sorts after ts
+    rescale_buckets(spark, t, 4)
 
     v = t.version_as_of(ts_between)
     assert v == 1
@@ -295,9 +297,10 @@ def test_timestamp_time_travel_and_history(spark, tmp_path):
         t.version_as_of(-1)
 
     h = t.history()
-    assert [x["version"] for x in h] == [0, 1, 2]
+    assert [x["version"] for x in h] == [0, 1, 2, 3]
     assert h[0]["operation"] == "create" and h[0]["rows"] == 0
     assert h[1]["rows_delta"] == 1 and h[2]["rows_delta"] == 1
+    assert h[3]["operation"] == "rescale" and h[3]["rows_delta"] == 0
     assert h[2]["fence_tokens"] == 2
 
 

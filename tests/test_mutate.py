@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    IntegerType, StringType, StructField, StructType,
+    DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
 from concepts_pipeline_spark.cdc.apply import CdcPipeline
@@ -93,19 +93,22 @@ def test_dml_on_mor_table(spark, tmp_path):
 
 
 def test_dml_on_plain_table_and_guardrails(spark, tmp_path):
+    # _score is a USER column: only the engine's own columns are hidden, so
+    # an update of v must carry _score through unchanged
     schema = StructType([
         StructField("k", StringType(), False),
         StructField("v", IntegerType(), True),
+        StructField("_score", DoubleType(), True),
     ])
     t = LakeTable.create(str(tmp_path / "plain"), schema, ["k"], num_buckets=2)
     rows = spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3)], schema
+        [("a", 1, 0.5), ("b", 2, 1.5), ("c", 3, 2.5)], schema
     ).withColumn("op", F.lit("U"))
     merge_into(spark, t, rows, fence_token="p0")
     update_where(spark, t, {"v": "v * 100"}, "v >= 2", fence_token="p1")
     delete_where(spark, t, F.col("k") == "a", fence_token="p2")
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got == {"b": 200, "c": 300}
+    got = {r["k"]: (r["v"], r["_score"]) for r in t.read(spark).collect()}
+    assert got == {"b": (200, 1.5), "c": (300, 2.5)}
 
     with pytest.raises(ValueError, match="key column"):
         update_where(spark, t, {"k": F.lit("x")}, "v = 1")

@@ -182,17 +182,32 @@ def test_mirror_rescale_guard_rejects_stale_bucket_ids(spark, tmp_path):
 def test_logical_digest_and_verify_replica(spark, tmp_path):
     """The replication checksum: digest is invariant to bucket layout and
     physical generations, detects a single-row divergence, and verify_replica
-    compares at the replica's APPLIED version (not the racing head)."""
+    compares at the replica's APPLIED version (not the racing head). A
+    user column named _score is replicated and covered by the digest."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
     from concepts_pipeline_spark.lake.replicate import (
         Replica, logical_digest, verify_replica,
     )
     from concepts_pipeline_spark.lake.merge import merge_into
     from concepts_pipeline_spark.lake.table import LakeTable
-    from tests.test_branch import SRC_SCHEMA, _events, _table
+    from tests.test_branch import SRC_SCHEMA, TARGET_SCHEMA, _events
 
-    t = _table(spark, tmp_path, "p", num_buckets=4)
-    merge_into(spark, t, _events(spark, [("a", [1], 1, "s", "U", 1),
-                                         ("b", [2], 1, "s", "U", 1)]),
+    t = LakeTable.create(
+        str(tmp_path / "p"),
+        StructType(TARGET_SCHEMA.fields + [
+            StructField("_score", DoubleType(), True),
+            StructField("_lsn", LongType(), True),
+        ]),
+        ["doc_id"], 4,
+    )
+
+    def events(rows, score=0.5):
+        return _events(spark, rows).withColumn("_score", F.lit(score))
+
+    merge_into(spark, t, events([("a", [1], 1, "s", "U", 1),
+                                 ("b", [2], 1, "s", "U", 1)]),
                fence_token="c1", lsn_col="lsn")
     rep = Replica(spark, t, str(tmp_path / "r"), num_buckets=2)  # different layout
     rep.refresh()
@@ -200,14 +215,16 @@ def test_logical_digest_and_verify_replica(spark, tmp_path):
     assert out["match"] and out["primary"]["rows"] == 2
 
     # primary advances; the replica lags but still verifies at ITS version
-    merge_into(spark, t, _events(spark, [("c", [3], 1, "s", "U", 2)]),
+    merge_into(spark, t, events([("c", [3], 1, "s", "U", 2)]),
                fence_token="c2", lsn_col="lsn")
     assert verify_replica(spark, t, rep)["match"]
     rep.refresh()
     assert verify_replica(spark, t, rep)["match"]
+    assert {r["_score"] for r in rep.table.read(spark).collect()} == {0.5}
 
-    # a divergent replica is caught
-    merge_into(spark, rep.table, _events(spark, [("c", [9], 1, "s", "U", 99)]),
+    # a divergent replica is caught, even when only _score differs
+    merge_into(spark, rep.table,
+               events([("c", [3], 1, "s", "U", 99)], score=9.5),
                fence_token="rogue", lsn_col="lsn")
     assert not verify_replica(spark, t, rep)["match"]
 

@@ -70,15 +70,22 @@ def test_sync_snapshot_all_modes(spark, tmp_path, mode, strat):
 def test_sync_null_semantics_on_partial_tables(spark, tmp_path, strat):
     """On a partial table a dump NULL is ambiguous: 'clear' (default) treats
     the dump as COMPLETE (the column IS null — whole-row statement at the
-    sync LSN); 'keep' treats it as sparse (registers preserve the value)."""
-    for null_means, want_src in (("clear", None), ("keep", "s0")):
+    sync LSN); 'keep' treats it as sparse (registers preserve the value).
+    A dump row with NULL tokens is applied, not quarantined, under both."""
+    for null_means, want_src, want_n in (
+        ("clear", None, (None, None, "s1")),
+        ("keep", "s0", ([1], 1, "s1")),
+    ):
         pipe = _pipe(spark, tmp_path, f"nm-{strat}-{null_means}",
                      update_mode="partial", strategy=strat)
         pipe.apply_batch(spark.createDataFrame(
-            [("a", 1, "U", [1], 1, "s0")], EV_DDL), "b1")
-        snap = spark.createDataFrame([("a", [9], 1, None)], SNAP_DDL)
+            [("a", 1, "U", [1], 1, "s0"), ("n", 1, "U", [1], 1, "s0")],
+            EV_DDL), "b1")
+        snap = spark.createDataFrame(
+            [("a", [9], 1, None), ("n", None, None, "s1")], SNAP_DDL)
         pipe.sync_snapshot(snap, "s", null_means=null_means)
-        assert _state(pipe) == {"a": ([9], 1, want_src)}, (strat, null_means)
+        assert _state(pipe) == {"a": ([9], 1, want_src), "n": want_n}, (
+            strat, null_means)
         # registers stay coherent either way: an older source assignment
         # arriving later must lose to the sync's statement
         pipe.apply_batch(spark.createDataFrame(

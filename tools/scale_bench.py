@@ -1,15 +1,46 @@
-"""Scaling-efficiency evidence: the same CDC replay at two local parallelism levels.
+"""Scaling and endurance evidence: one harness, five scenarios.
 
 BASELINE.json's north rule demands throughput scaling efficiency >= 0.8 from N to
 4N executors; in this sandbox (no real cluster) the evidence is the same job at
-local[N] and local[4N] over the identical on-disk change log (TESTDATA rule).
+local[N] and local[4N] over the identical on-disk input (TESTDATA rule).
+
+Scenarios (``--scenario``, default ``replay``):
+
+- ``replay``: CDC replay of a generated change log (``--strategy``, ``--wap``,
+  ``--partial``, ``--multi-batch``).
+- ``refresh``: view / token-index / replica / dup-index refresh of ONE
+  bucket-localized commit. Refresh cost is O(changed buckets of the commit),
+  not O(table): the timed commit touches only ``--inc-buckets`` of the base's
+  32 buckets, and each surface folds exactly that commit.
+- ``view``: view refresh at the commit size where the Amdahl crossover lives.
+  At refresh's commit size the ~1.5 s fixed floor (one job barrier + parquet
+  write + CAS commit) dominates the join-free fold; BASELINE.md's
+  decomposition predicts >= 0.8 at ~45M-row commits. Prep builds ONE shared
+  base (bulk commit v1, whole-table update commit v2) and checks once that
+  folding v1->v2 equals the declarative recompute; each worker opens the base
+  read-only, bootstraps a private one-row-per-group view at v1 (untimed) and
+  times the v1->v2 fold.
+- ``cluster``: the z-order ``cluster_by`` rewrite (one read + one range
+  shuffle + one bucketed write) over a bulk-replayed table, with the file
+  counts a 2-D probe keeps before and after. Reuses ``refresh``'s feed.
+- ``endurance``: per-batch apply cost vs table size — the TIME axis. B equal
+  micro-batches go in order into a fresh table per strategy; the summary
+  compares the mean per-batch seconds of the FIRST and LAST quarter (after a
+  2-batch JIT warm-up cut). ``growth_ratio`` ~ 1.0 is the flat-cost claim:
+  CoW rewrites every touched bucket in full, MoR with tiered auto-compaction
+  writes O(batch) deltas. One unpinned worker per strategy at one ``--cpus``.
 
 Usage:
-  python tools/scale_bench.py                 # prep feed, run at 8 and 32 cores
+  python tools/scale_bench.py                       # replay, 2 vs 8 cores
   python tools/scale_bench.py --events 4000000 --cpus 8 32
+  python tools/scale_bench.py --scenario refresh --events 1000000 --cpus 2 8
+  python tools/scale_bench.py --scenario endurance --strategies mor
 
-Each level runs in its own subprocess (fresh JVM) so executor-thread pools and
-memory are clean. Prints one JSON summary line; paste results into BASELINE.md.
+Inputs are prepared once per parameter set under
+``$SCALE_FEED_DIR/<feed>-e<events>-k<keys>-b<batches>-t<max_tokens>``
+(default root ``/tmp/cps-scale-feed``). Each level runs in its own subprocess
+(fresh JVM, so executor-thread pools and memory are clean). Prints each
+worker's JSON line, then one JSON summary line; paste results into BASELINE.md.
 """
 
 from __future__ import annotations
@@ -17,35 +48,64 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-FEED_DIR = os.environ.get("SCALE_FEED_DIR", "/tmp/cps-scale-feed")
+FEED_ROOT = os.environ.get("SCALE_FEED_DIR", "/tmp/cps-scale-feed")
+NUM_BUCKETS = 32  # identical physical layout at every parallelism level
+
+# per-scenario defaults; "feed" names the prepared input ("cluster" reuses
+# "refresh"'s), "seed" its generator seed
+SCENARIOS = {
+    "replay": dict(events=4_000_000, keys=400_000, batches=2, max_tokens=256,
+                   cpus=[2, 8], feed="replay", seed=42),
+    "refresh": dict(events=2_000_000, keys=200_000, batches=1, max_tokens=32,
+                    cpus=[8, 32], feed="refresh", seed=43),
+    "view": dict(events=120_000_000, keys=78_000_000, batches=1, max_tokens=8,
+                 cpus=[2, 8], feed="view", seed=47),
+    "cluster": dict(events=2_000_000, keys=200_000, batches=1, max_tokens=32,
+                    cpus=[2, 8], feed="refresh", seed=43),
+    "endurance": dict(events=24_000_000, keys=8_000_000, batches=24,
+                      max_tokens=64, cpus=[16], feed="endurance", seed=44),
+}
+SURFACES = ["view_refresh", "index_refresh", "replica_refresh", "dupix_refresh"]
+VIEW_GROUPS = ["source"]
+VIEW_SUMS = {"tok_sum": "n_tok"}
 
 
-def prep(num_events: int, num_keys: int, num_batches: int) -> None:
-    """Build the feed in a SUBPROCESS. The Py4J gateway JVM outlives
+# ---------------------------------------------------------------- shared parts
+
+def feed_dir(args) -> str:
+    sc = SCENARIOS[args.scenario]
+    return os.path.join(
+        FEED_ROOT,
+        f"{sc['feed']}-e{args.events}-k{args.keys}-b{args.batches}"
+        f"-t{args.max_tokens}",
+    )
+
+
+def prep(args, argv: list[str]) -> None:
+    """Build the scenario's input in a SUBPROCESS. The Py4J gateway JVM outlives
     ``spark.stop()`` for as long as its Python process runs — doing prep
     in-process would leave that JVM alive through every timed worker, stealing
     pinned cores and polluting the all-java CPU accounting (observed: a
     lingering prep JVM at ~90% CPU quadrupled a worker's measured jvm_cpu_sec)."""
-    marker = os.path.join(FEED_DIR, f".ready-{num_events}-{num_keys}-{num_batches}")
+    d = feed_dir(args)
+    marker = os.path.join(d, ".ready")
     if os.path.exists(marker):
         return
-    subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--prep-worker",
-         "--events", str(num_events), "--keys", str(num_keys),
-         "--batches", str(num_batches)],
-        cwd=REPO, check=True,
-    )
+    shutil.rmtree(d, ignore_errors=True)
+    subprocess.run(self_cmd(argv, "--prep-worker"), cwd=REPO, check=True)
     open(marker, "w").close()
 
 
-def prep_worker(num_events: int, num_keys: int, num_batches: int) -> None:
+def prep_feed(args) -> None:
     from concepts_pipeline_spark.cdc.generator import (
         generate_change_log,
         write_change_log,
@@ -56,64 +116,165 @@ def prep_worker(num_events: int, num_keys: int, num_batches: int) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # fixed parallelism => identical files regardless of the session's core count
     df = generate_change_log(
-        spark, num_events, num_keys, seed=42, num_batches=num_batches,
-        max_tokens=256,  # mean ~128-token payloads: realistic pre-tokenized rows
-        parallelism=64,
+        spark, args.events, args.keys, seed=SCENARIOS[args.scenario]["seed"],
+        num_batches=args.batches, max_tokens=args.max_tokens, parallelism=64,
     )
-    write_change_log(df, FEED_DIR)
+    write_change_log(df, feed_dir(args))
     spark.stop()
 
 
-def _comm(pid: str) -> str:
-    try:
-        with open(f"/proc/{pid}/comm") as fh:
-            return fh.read().strip()
-    except OSError:
-        return ""
-
-
-def _jvm_cpu_seconds() -> float:
-    """Total utime+stime of all java processes — wall-noise-free work accounting."""
-    total = 0.0
+def java_pids() -> list[str]:
+    pids = []
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
             continue
         try:
             with open(f"/proc/{pid}/comm") as fh:
-                if fh.read().strip() != "java":
-                    continue
-            with open(f"/proc/{pid}/stat") as fh:
-                p = fh.read().split()
-            total += (int(p[13]) + int(p[14])) / os.sysconf("SC_CLK_TCK")
+                if fh.read().strip() == "java":
+                    pids.append(pid)
         except OSError:
             pass
-    return total
+    return pids
 
 
-def worker(cpus: int, num_batches: int, single_batch: bool = False,
-           strategy: str = "cow", wap: bool = False,
-           partial: bool = False) -> None:
-    import tempfile
+def jvm_cpu_seconds() -> dict[str, float]:
+    """utime+stime per java process — wall-noise-free work accounting."""
+    out = {}
+    for pid in java_pids():
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                p = fh.read().split()
+        except OSError:
+            continue
+        out[pid] = (int(p[13]) + int(p[14])) / os.sysconf("SC_CLK_TCK")
+    return out
 
-    from pyspark.sql import functions as F
 
-    from concepts_pipeline_spark.cdc.apply import CdcPipeline
-    from concepts_pipeline_spark.cdc.generator import CHANGE_LOG_SCHEMA
+def measured(fn):
+    """``(fn(), wall seconds, JVM CPU seconds)``. CPU is the growth of each
+    java process alive at the end, so a JVM that exits inside the window
+    cannot subtract its whole lifetime (observed: negative jvm_cpu_sec)."""
+    c0, t0 = jvm_cpu_seconds(), time.time()
+    out = fn()
+    dt = time.time() - t0
+    c1 = jvm_cpu_seconds()
+    return out, dt, sum(c - c0.get(pid, 0.0) for pid, c in c1.items())
+
+
+def session(name: str, cpus: int, parallel_gc: bool = True):
     from concepts_pipeline_spark.session import get_spark
-
-    from __spark_entry__ import TOKENS_SCHEMA
 
     # same task granularity PER CORE at every level (4 shuffle partitions per
     # core): otherwise the 4N level runs 1 task/core and a single straggler
-    # stalls the whole stage tail, understating scaling efficiency
-    spark = get_spark(app_name=f"cps-scale-{cpus}", cpus=cpus,
-                      shuffle_partitions=max(4 * cpus, 8))
+    # stalls the whole stage tail, understating scaling efficiency.
+    # ParallelGC: with many concurrent vectorized-parquet readers in ONE
+    # local-mode JVM, G1 inflated JVM CPU 25-40% at the wide level vs the
+    # narrow one (measured) — collector overhead a per-executor-JVM cluster
+    # never sees. ParallelGC conserves CPU across levels, so the wall ratio
+    # measures the engine, not the collector.
+    extra = ({"spark.driver.extraJavaOptions": "-XX:+UseParallelGC"}
+             if parallel_gc else None)
+    spark = get_spark(app_name=f"cps-{name}-{cpus}", cpus=cpus,
+                      shuffle_partitions=max(4 * cpus, 8), extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
-    feed = (
-        spark.read.schema(CHANGE_LOG_SCHEMA)
-        .parquet(f"file://{FEED_DIR}")
+    return spark
+
+
+def read_feed(spark, args):
+    from concepts_pipeline_spark.cdc.generator import CHANGE_LOG_SCHEMA
+
+    return spark.read.schema(CHANGE_LOG_SCHEMA).parquet(
+        f"file://{feed_dir(args)}")
+
+
+def bulk_pipe(spark, feed, root: str):
+    """The whole feed applied as one bulk commit into a 32-bucket CoW table."""
+    from concepts_pipeline_spark.cdc.apply import CdcPipeline
+
+    from __spark_entry__ import TOKENS_SCHEMA
+
+    pipe = CdcPipeline(spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
+                       num_buckets=NUM_BUCKETS)
+    pipe.apply_batch(feed.drop("batch_id"), fence_token="bulk:0")
+    return pipe
+
+
+def update_every_key(state, feed):
+    """One update per row of ``state``, above every feed LSN: tokens reversed
+    and shortened by one, source re-tagged."""
+    from pyspark.sql import functions as F
+
+    max_lsn = feed.agg(F.max("lsn")).first()[0]
+    shorter = F.greatest(F.size("tokens") - 1, F.lit(1))
+    return state.select(
+        (F.lit(max_lsn) + F.xxhash64("doc_id") % 1000 + 1001).alias("lsn"),
+        F.lit("U").alias("op"),
+        "doc_id",
+        F.slice(F.reverse("tokens"), 1, shorter).alias("tokens"),
+        shorter.cast("int").alias("n_tok"),
+        F.concat(F.col("source"), F.lit("+r")).alias("source"),
     )
-    if partial:
+
+
+def self_cmd(argv: list[str], *extra: str) -> list[str]:
+    return [sys.executable, os.path.abspath(__file__), *argv, *extra]
+
+
+def launch(cmd: list[str], pin_cpus: int | None, label: str) -> dict:
+    """Run one worker; print and return its last JSON line. ``pin_cpus``
+    pins it to cores 0..c-1 — pinning emulates the hard per-executor CPU
+    limits of a real cluster; without it GC/IO threads overflow the nominal
+    core budget."""
+    if pin_cpus is not None and os.path.exists("/usr/bin/taskset"):
+        cmd = ["taskset", "-c", f"0-{pin_cpus - 1}"] + cmd
+    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode != 0 or not lines:
+        # surface the worker's real failure instead of dying on an
+        # IndexError with its stderr discarded
+        sys.stderr.write(out.stderr[-4000:])
+        raise RuntimeError(
+            f"worker ({label}) exited rc={out.returncode} with no result "
+            "line — stderr above"
+        )
+    print(lines[-1], flush=True)
+    return json.loads(lines[-1])
+
+
+def run_levels(args, argv: list[str]) -> dict[int, list[dict]]:
+    """Interleave levels (A,B,A,B) so hypervisor-noise windows hit both
+    levels equally; the summary takes best-of per level because noise is
+    strictly additive."""
+    runs: dict[int, list[dict]] = {c: [] for c in args.cpus}
+    for _ in range(args.repeats):
+        for c in args.cpus:
+            runs[c].append(launch(self_cmd(argv, "--worker", str(c)),
+                                  None if args.no_pin else c, f"cpus={c}"))
+    return runs
+
+
+def scaling(runs: dict[int, list[dict]], rate) -> tuple[dict, dict, dict]:
+    """Best run of the lowest and highest level by ``rate``, and the
+    speedup/efficiency between them."""
+    lo_c, hi_c = min(runs), max(runs)
+    lo, hi = max(runs[lo_c], key=rate), max(runs[hi_c], key=rate)
+    speedup = rate(hi) / rate(lo)
+    return lo, hi, {"speedup": round(speedup, 3),
+                    "efficiency": round(speedup / (hi_c / lo_c), 3)}
+
+
+# ------------------------------------------------------------------- scenarios
+
+def replay_worker(args, cpus: int) -> None:
+    from pyspark.sql import functions as F
+
+    from concepts_pipeline_spark.cdc.apply import CdcPipeline
+
+    from __spark_entry__ import TOKENS_SCHEMA
+
+    spark = session("scale", cpus, parallel_gc=False)
+    feed = read_feed(spark, args)
+    if args.partial:
         # sparsify deterministically into column-level events: 1/3 full rows,
         # 1/3 tokens+n_tok only, 1/3 source only (deletes untouched) — the
         # column-register fold then has real per-column contention to resolve
@@ -135,9 +296,9 @@ def worker(cpus: int, num_batches: int, single_batch: bool = False,
         key_cols=["doc_id"],
         quarantine_path=f"{root}/quarantine",
         lineage_path=f"{root}/lineage",
-        num_buckets=32,  # identical physical layout at every parallelism level
-        strategy=strategy,
-        update_mode="partial" if partial else "replace",
+        num_buckets=NUM_BUCKETS,
+        strategy=args.strategy,
+        update_mode="partial" if args.partial else "replace",
     )
     # JIT/codegen warmup on a scratch table: the first micro-batch otherwise pays
     # ~10 s of one-time JVM compilation that is not steady-state throughput
@@ -150,7 +311,7 @@ def worker(cpus: int, num_batches: int, single_batch: bool = False,
         fence_token="warmup:0",
     )
 
-    if wap:
+    if args.wap:
         # the WAP level: every batch branch-staged, audited on the scoped
         # staged_changes diff (O(changed buckets)), then fast-forward
         # published — measures the quality gate's real overhead at scale
@@ -167,24 +328,24 @@ def worker(cpus: int, num_batches: int, single_batch: bool = False,
         def apply_one(batch, token):
             return pipe.apply_batch(batch, fence_token=token)
 
-    c0, t0 = _jvm_cpu_seconds(), time.time()
-    applied = 0
-    if single_batch:
-        # batch size is a tuning knob (the reference tuned 25k/50k/100k bulk
-        # batches, aggregator/reference.conf:10-14); one big micro-batch packs
-        # stages best and is the steady-state-throughput configuration
-        res = apply_one(feed.drop("batch_id"), "scale:all")
-        applied += res.rows_in
-    else:
-        for b in range(num_batches):
-            batch = feed.filter(F.col("batch_id") == b).drop("batch_id")
-            res = apply_one(batch, f"scale:{b}")
-            applied += res.rows_in
-    elapsed = time.time() - t0
-    jvm_cpu = _jvm_cpu_seconds() - c0
+    def apply_all() -> int:
+        if not args.multi_batch:
+            # batch size is a tuning knob (the reference tuned 25k/50k/100k
+            # bulk batches, aggregator/reference.conf:10-14); one big
+            # micro-batch packs stages best and is the steady-state-throughput
+            # configuration
+            return apply_one(feed.drop("batch_id"), "scale:all").rows_in
+        return sum(
+            apply_one(feed.filter(F.col("batch_id") == b).drop("batch_id"),
+                      f"scale:{b}").rows_in
+            for b in range(args.batches)
+        )
+
+    applied, elapsed, jvm_cpu = measured(apply_all)
     final_rows = pipe.final_state().count()
     print(json.dumps({
-        "cpus": cpus, "strategy": strategy, "wap": wap, "partial": partial,
+        "cpus": cpus, "strategy": args.strategy, "wap": args.wap,
+        "partial": args.partial,
         "events": n_events, "applied": applied,
         "elapsed_sec": round(elapsed, 2),
         "events_per_sec": round(n_events / elapsed, 1),
@@ -195,92 +356,380 @@ def worker(cpus: int, num_batches: int, single_batch: bool = False,
     spark.stop()
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--events", type=int, default=4_000_000)
-    ap.add_argument("--keys", type=int, default=400_000)
-    ap.add_argument("--batches", type=int, default=2)
-    ap.add_argument("--cpus", type=int, nargs="+", default=[2, 8],
-                    help="N and 4N parallelism levels (default 2 vs 8)")
+def replay_summary(runs) -> dict:
+    lo, hi, s = scaling(runs, lambda r: r["events_per_sec"])
+    return {
+        "metric": "CDC replay scaling efficiency (best-of interleaved repeats)",
+        "cores": [lo["cpus"], hi["cpus"]],
+        "events_per_sec": [lo["events_per_sec"], hi["events_per_sec"]],
+        "jvm_cpu_sec": [lo["jvm_cpu_sec"], hi["jvm_cpu_sec"]],
+        **s,
+    }
+
+
+def refresh_worker(args, cpus: int) -> None:
+    from concepts_pipeline_spark.lake.dupindex import DupHashIndex
+    from concepts_pipeline_spark.lake.index import TokenIndex
+    from concepts_pipeline_spark.lake.replicate import Replica
+    from concepts_pipeline_spark.lake.table import bucket_expr
+    from concepts_pipeline_spark.lake.view import IncrementalAggView
+
+    spark = session("refresh", cpus)
+    feed = read_feed(spark, args)
+    root = tempfile.mkdtemp(prefix=f"cps-refresh-{cpus}-")
+
+    # ---- untimed setup: base replay (one bulk commit) + derived bootstrap
+    pipe = bulk_pipe(spark, feed, root)
+    view = IncrementalAggView(
+        spark, pipe.target, f"{root}/view",
+        group_cols=VIEW_GROUPS, sum_cols=VIEW_SUMS, num_buckets=4,
+    )
+    view.full_refresh()
+    ix = TokenIndex(
+        spark, pipe.target, f"{root}/ix",
+        num_shards=8, num_buckets=16, max_postings=200_000,
+    )
+    ix.refresh()
+    rep = Replica(spark, pipe.target, f"{root}/replica", num_buckets=16)
+    rep.refresh()
+    dupix = DupHashIndex(
+        spark, pipe.target, f"{root}/dupix", k=4, num_buckets=16
+    )
+    dupix.full_refresh()
+
+    # ---- the bucket-localized incremental commit: update every live key
+    # hashing into the first `inc_buckets` buckets (diff then provably reads
+    # only those buckets on both sides)
+    state = pipe.final_state()
+    inc = update_every_key(
+        state.filter(bucket_expr(["doc_id"], NUM_BUCKETS) < args.inc_buckets),
+        feed,
+    )
+    inc_rows = inc.count()
+    pipe.apply_batch(inc, fence_token="inc:1")
+    base_rows = state.count()
+
+    # ---- timed refreshes: each folds EXACTLY the incremental commit
+    timings: dict[str, dict] = {}
+    for name, surface in zip(SURFACES, (view, ix, rep, dupix)):
+        _, dt, jvm = measured(surface.refresh)
+        timings[name] = {
+            "sec": round(dt, 2),
+            "rows_per_sec": round(inc_rows / dt, 1),
+            "jvm_cpu_sec": round(jvm, 1),
+        }
+    print(json.dumps({
+        "cpus": cpus,
+        "base_rows": base_rows,
+        "inc_rows": inc_rows,
+        "inc_buckets": args.inc_buckets,
+        "num_buckets": NUM_BUCKETS,
+        "timings": timings,
+    }))
+    spark.stop()
+
+
+def refresh_summary(runs) -> dict:
+    surfaces = {}
+    for s in SURFACES:
+        def rate(r, s=s):
+            return r["timings"][s]["rows_per_sec"]
+
+        lo, hi, sc = scaling(runs, rate)
+        surfaces[s] = {"rows_per_sec": [rate(lo), rate(hi)], **sc}
+    return {
+        "metric": "incremental-refresh scaling (best-of interleaved repeats)",
+        "cores": [min(runs), max(runs)],
+        "surfaces": surfaces,
+    }
+
+
+def view_meta_path(args) -> str:
+    return os.path.join(feed_dir(args), "meta.json")
+
+
+def prep_view(args) -> None:
+    from concepts_pipeline_spark.cdc.generator import generate_change_log
+    from concepts_pipeline_spark.lake.view import IncrementalAggView
+    from concepts_pipeline_spark.session import get_spark
+
+    root = feed_dir(args)
+    os.makedirs(root, exist_ok=True)
+    spark = get_spark(app_name="cps-viewscale-prep", cpus=16,
+                      shuffle_partitions=64)
+    spark.sparkContext.setLogLevel("ERROR")
+    feed = generate_change_log(
+        spark, args.events, args.keys, seed=SCENARIOS["view"]["seed"],
+        num_batches=1, max_tokens=args.max_tokens, parallelism=128,
+    ).drop("batch_id")
+    pipe = bulk_pipe(spark, feed, root)
+    v1 = pipe.target.current_version()
+    # the measured commit: every live key updated (whole-table churn — the
+    # worst case for the view's two-sided scan, and the largest commit this
+    # base can express)
+    state = pipe.final_state()
+    pipe.apply_batch(update_every_key(state, feed), fence_token="inc:1")
+    v2 = pipe.target.current_version()
+    inc_rows = state.count()
+
+    # one-shot correctness check of the exact path the workers will time:
+    # bootstrap at v1, fold the span, compare to the declarative recompute
+    view = IncrementalAggView(
+        spark, pipe.target, f"{root}/view-verify",
+        group_cols=VIEW_GROUPS, sum_cols=VIEW_SUMS, num_buckets=4,
+    )
+    view.full_refresh(version=v1)
+    view.refresh()
+    got = view.read()
+    want = view.recompute(version=v2)
+    bad = got.exceptAll(want).count() + want.exceptAll(got).count()
+    if bad:
+        raise AssertionError(
+            f"incremental fold v{v1}->v{v2} diverges from recompute: "
+            f"{bad} mismatched group rows"
+        )
+    with open(view_meta_path(args), "w") as fh:
+        json.dump({
+            "events": args.events, "keys": args.keys,
+            "max_tokens": args.max_tokens,
+            "base_path": f"{root}/tokens", "v1": v1, "v2": v2,
+            "inc_rows": inc_rows, "verified": True,
+        }, fh)
+    spark.stop()
+
+
+def view_worker(args, cpus: int) -> None:
+    from concepts_pipeline_spark.lake.table import LakeTable
+    from concepts_pipeline_spark.lake.view import IncrementalAggView
+
+    with open(view_meta_path(args)) as fh:
+        meta = json.load(fh)
+    spark = session("viewscale", cpus)
+    root = tempfile.mkdtemp(prefix=f"cps-viewscale-{cpus}-")
+    # one bucket: the view is one row per group (six rows here) — extra
+    # buckets only add per-commit file writes to the serial floor
+    view = IncrementalAggView(
+        spark, LakeTable(meta["base_path"]), f"{root}/view",
+        group_cols=VIEW_GROUPS, sum_cols=VIEW_SUMS, num_buckets=1,
+    )
+    view.full_refresh(version=meta["v1"])
+    assert view.applied_version() == meta["v1"]
+
+    _, dt, jvm = measured(view.refresh)
+    assert view.applied_version() == meta["v2"]
+    print(json.dumps({
+        "cpus": cpus,
+        "inc_rows": meta["inc_rows"],
+        "sec": round(dt, 2),
+        "rows_per_sec": round(meta["inc_rows"] / dt, 1),
+        "jvm_cpu_sec": round(jvm, 1),
+    }))
+    spark.stop()
+
+
+def view_summary(runs) -> dict:
+    lo, hi, s = scaling(runs, lambda r: r["rows_per_sec"])
+    return {
+        "metric": "view-refresh scaling at crossover commit size "
+                  "(best-of interleaved repeats)",
+        "cores": [min(runs), max(runs)],
+        "inc_rows": lo["inc_rows"],
+        "rows_per_sec": [lo["rows_per_sec"], hi["rows_per_sec"]],
+        **s,
+    }
+
+
+def cluster_worker(args, cpus: int) -> None:
+    from concepts_pipeline_spark.lake.cluster import cluster_by
+
+    spark = session("cluster", cpus)
+    root = tempfile.mkdtemp(prefix=f"cps-cluster-{cpus}-")
+    t = bulk_pipe(spark, read_feed(spark, args), root).target
+    base_rows = t.read(spark).count()
+
+    probe = [("n_tok", 4, 8), ("source", "loc", "loc")]
+    m0 = t.manifest()
+    kept_before = len(t.files_where_all(m0, probe))
+    r, dt, jvm = measured(lambda: cluster_by(
+        spark, t, ["n_tok", "source"], bits=6, files_per_bucket=4))
+    m1 = t.manifest()
+    kept_after = len(t.files_where_all(m1, probe))
+    print(json.dumps({
+        "cpus": cpus,
+        "base_rows": base_rows,
+        "cluster_sec": round(dt, 2),
+        "rows_per_sec": round(base_rows / dt, 1),
+        "jvm_cpu_sec": round(jvm, 1),
+        "files": r["files"],
+        "probe_kept_files": [kept_before, len(m0.files),
+                             kept_after, len(m1.files)],
+    }))
+    spark.stop()
+
+
+def cluster_summary(runs) -> dict:
+    lo, hi, s = scaling(runs, lambda r: r["rows_per_sec"])
+    return {
+        "metric": "cluster_by scaling (best-of interleaved repeats)",
+        "cores": [min(runs), max(runs)],
+        "rows_per_sec": [lo["rows_per_sec"], hi["rows_per_sec"]],
+        **s,
+    }
+
+
+def live_stats(table) -> dict:
+    """Live-table size from the CURRENT manifest — superseded generations
+    linger on disk until expire_snapshots, so a raw data/ scan would conflate
+    retention policy with table growth."""
+    m = table.manifest()
+    total = 0
+    for f in m.files:
+        try:
+            total += os.path.getsize(os.path.join(table.path, f.path))
+        except OSError:
+            pass
+    return {"table_bytes": total, "live_files": len(m.files),
+            "delta_files": sum(f.kind == "delta" for f in m.files)}
+
+
+def endurance_worker(args, cpus: int) -> None:
+    from pyspark.sql import functions as F
+
+    from concepts_pipeline_spark.cdc.apply import CdcPipeline
+
+    from __spark_entry__ import TOKENS_SCHEMA
+
+    strategy = args.strategy
+    spark = session(f"endurance-{strategy}", cpus)
+    feed = read_feed(spark, args)
+    root = tempfile.mkdtemp(prefix=f"cps-endurance-{strategy}-")
+    pipe = CdcPipeline(
+        spark, f"{root}/tokens", TOKENS_SCHEMA, ["doc_id"],
+        num_buckets=NUM_BUCKETS, strategy=strategy,
+        # tiered-compact once a bucket's delta pile passes 4 files: compaction
+        # cost is INSIDE the timed loop — the flat-cost claim must include
+        # maintenance
+        auto_compact_max_deltas=4 if strategy == "mor" else None,
+    )
+    batches = []
+    for b in range(args.batches):
+        batch = feed.filter(F.col("batch_id") == b).drop("batch_id")
+        t0 = time.time()
+        res = pipe.apply_batch(batch, fence_token=f"endure:{b}")
+        batches.append({
+            "batch": b,
+            "sec": round(time.time() - t0, 2),
+            "rows_in": res.rows_in,
+            **live_stats(pipe.target),
+        })
+        print(json.dumps(batches[-1]), flush=True)
+    print(json.dumps({
+        "strategy": strategy, "cpus": cpus,
+        "final_rows": pipe.final_state().count(), "batches": batches,
+    }), flush=True)
+    spark.stop()
+
+
+def endurance(args, argv: list[str]) -> None:
+    cpus = args.cpus[0]
+    summary = {}
+    for strategy in args.strategies:
+        result = launch(
+            self_cmd(argv, "--worker", str(cpus), "--strategy", strategy),
+            None, strategy,
+        )
+        rows = result["batches"][2:]  # cut the 2-batch JIT warmup
+        q = max(1, len(rows) // 4)
+        first = sum(r["sec"] for r in rows[:q]) / q
+        last = sum(r["sec"] for r in rows[-q:]) / q
+        summary[strategy] = {
+            "first_quarter_sec_per_batch": round(first, 2),
+            "last_quarter_sec_per_batch": round(last, 2),
+            "growth_ratio": round(last / first, 3),
+            "final_rows": result["final_rows"],
+            "final_table_mb": round(
+                result["batches"][-1]["table_bytes"] / 1e6, 1
+            ),
+        }
+    print(json.dumps({
+        "metric": "per-batch apply cost vs table growth (constant batch size)",
+        "events": args.events, "batches": args.batches, "cpus": cpus,
+        "compact_mode": "tiered", "strategies": summary,
+    }))
+
+
+WORKERS = {"replay": replay_worker, "refresh": refresh_worker,
+           "view": view_worker, "cluster": cluster_worker,
+           "endurance": endurance_worker}
+SUMMARIES = {"replay": replay_summary, "refresh": refresh_summary,
+             "view": view_summary, "cluster": cluster_summary}
+
+
+def parse(argv: list[str]) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="N-vs-4N scaling and endurance scenarios")
+    ap.add_argument("--scenario", default="replay", choices=sorted(SCENARIOS))
+    ap.add_argument("--events", type=int)
+    ap.add_argument("--keys", type=int)
+    ap.add_argument("--batches", type=int)
+    ap.add_argument("--max-tokens", type=int)
+    ap.add_argument("--cpus", type=int, nargs="+",
+                    help="N and 4N parallelism levels (endurance: one level)")
     ap.add_argument("--repeats", type=int, default=2,
                     help="interleaved repeats; best-of per level controls host noise")
     ap.add_argument("--no-pin", action="store_true",
-                    help="disable taskset CPU pinning (pinning emulates the hard "
-                         "per-executor CPU limits of a real cluster; without it "
-                         "GC/IO threads overflow the nominal core budget)")
+                    help="disable taskset CPU pinning")
+    ap.add_argument("--strategy", default="cow", choices=["cow", "mor"],
+                    help="replay: table strategy")
     ap.add_argument("--multi-batch", action="store_true",
-                    help="apply per-segment micro-batches instead of one big batch")
-    ap.add_argument("--strategy", default="cow", choices=["cow", "mor"])
+                    help="replay: apply per-segment micro-batches instead of "
+                         "one big batch")
     ap.add_argument("--wap", action="store_true",
-                    help="stage-audit-publish every batch (write-audit-publish)")
+                    help="replay: stage-audit-publish every batch")
     ap.add_argument("--partial", action="store_true",
-                    help="column-level CDC: sparsify the feed into sparse "
-                         "after-images and apply under update_mode='partial'")
+                    help="replay: sparsify the feed into column-level events "
+                         "and apply under update_mode='partial'")
+    ap.add_argument("--inc-buckets", type=int, default=8,
+                    help="refresh: buckets (of 32) the timed commit touches")
+    ap.add_argument("--strategies", nargs="+", default=["mor", "cow"],
+                    choices=["mor", "cow"], help="endurance: one worker each")
     ap.add_argument("--worker", type=int, default=None)
     ap.add_argument("--prep-worker", action="store_true")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    for k in ("events", "keys", "batches", "max_tokens", "cpus"):
+        if getattr(args, k) is None:
+            setattr(args, k, SCENARIOS[args.scenario][k])
+    if args.scenario == "endurance" and len(args.cpus) != 1:
+        ap.error("endurance runs at one --cpus level")
+    return args
 
+
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    args = parse(argv)
     if args.prep_worker:
-        prep_worker(args.events, args.keys, args.batches)
+        (prep_view if args.scenario == "view" else prep_feed)(args)
         return
     if args.worker is not None:
-        worker(args.worker, args.batches, single_batch=not args.multi_batch,
-               strategy=args.strategy, wap=args.wap, partial=args.partial)
+        WORKERS[args.scenario](args, args.worker)
         return
 
-    prep(args.events, args.keys, args.batches)
+    prep(args, argv)
     # the all-java CPU accounting requires OUR worker to be the only JVM alive
-    stray = [
-        pid for pid in os.listdir("/proc") if pid.isdigit()
-        and _comm(pid) == "java"
-    ]
+    stray = java_pids()
     if stray:
         print(f"WARNING: stray java process(es) {stray} will pollute "
               "jvm_cpu_sec and steal pinned cores — kill them first",
               file=sys.stderr)
-    # interleave levels (A,B,A,B) so hypervisor-noise windows hit both levels
-    # equally; best-of per level because noise is strictly additive
-    runs: dict[int, list[dict]] = {c: [] for c in args.cpus}
-    for _ in range(args.repeats):
-        for c in args.cpus:
-            cmd = [sys.executable, os.path.abspath(__file__),
-                   "--worker", str(c), "--batches", str(args.batches),
-                   "--strategy", args.strategy]
-            if args.multi_batch:
-                cmd.append("--multi-batch")
-            if args.wap:
-                cmd.append("--wap")
-            if args.partial:
-                cmd.append("--partial")
-            if not args.no_pin and os.path.exists("/usr/bin/taskset"):
-                cmd = ["taskset", "-c", f"0-{c - 1}"] + cmd
-            out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
-            lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
-            if out.returncode != 0 or not lines:
-                # surface the worker's real failure instead of dying on an
-                # IndexError with its stderr discarded
-                sys.stderr.write(out.stderr[-4000:])
-                raise RuntimeError(
-                    f"worker (cpus={c}) exited rc={out.returncode} with no "
-                    "result line — stderr above"
-                )
-            runs[c].append(json.loads(lines[-1]))
-            print(lines[-1], flush=True)
-
-    best = {c: max(rs, key=lambda r: r["events_per_sec"]) for c, rs in runs.items()}
-    levels = sorted(best)
-    if len(levels) >= 2:
-        lo, hi = best[levels[0]], best[levels[-1]]
-        ratio = hi["cpus"] / lo["cpus"]
-        speedup = hi["events_per_sec"] / lo["events_per_sec"]
-        print(json.dumps({
-            "metric": "CDC replay scaling efficiency (best-of interleaved repeats)",
-            "cores": [lo["cpus"], hi["cpus"]],
-            "events_per_sec": [lo["events_per_sec"], hi["events_per_sec"]],
-            "jvm_cpu_sec": [lo["jvm_cpu_sec"], hi["jvm_cpu_sec"]],
-            "speedup": round(speedup, 3),
-            "efficiency": round(speedup / ratio, 3),
-        }))
+    if args.scenario == "endurance":
+        endurance(args, argv)
+        return
+    if args.scenario == "view":
+        with open(view_meta_path(args)) as fh:
+            print(json.dumps({"prep": json.load(fh)}), flush=True)
+    runs = run_levels(args, argv)
+    if len(runs) >= 2:
+        print(json.dumps(SUMMARIES[args.scenario](runs)))
 
 
 if __name__ == "__main__":
