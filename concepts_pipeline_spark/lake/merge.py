@@ -29,12 +29,24 @@ atomic manifest commit as the data — the fence IS transactional with the merge
 
 from __future__ import annotations
 
+import datetime
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+)
 
 from .schema import conform, evolve_schema
 from .table import (  # the HIDDEN_* names stay importable from here
@@ -47,6 +59,7 @@ from .table import (  # the HIDDEN_* names stay importable from here
     LakeTable,
     Manifest,
     bucket_expr,
+    bucket_of,
 )
 
 ACTION_COL = "__action"
@@ -54,6 +67,9 @@ BUCKET_COL = "__bucket"
 
 
 _MIN_LSN = -(2**63) + 1
+
+# width of each integer key type, for range-checking point-lookup probes
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
 
 _ACTIONS = [
     "inserted", "updated", "deleted", "noop", "stale", "carried", "delete_missing",
@@ -1027,9 +1043,13 @@ def read_for_keys(
     20-53, done with storage statistics): prune to the buckets the keys hash to,
     then drop files whose [min_key, max_key] range excludes every key — only the
     surviving files are scanned, with a residual IN filter. MoR deltas in the
-    touched buckets are LWW-resolved."""
-    from pyspark.sql.types import StringType
+    touched buckets are LWW-resolved.
 
+    Probe keys are routed on the driver (``bucket_of``, the exact twin of
+    ``bucket_expr``), so planning the lookup runs no Spark job: on a table
+    without deltas the lookup is the one job that reads the surviving files.
+    Key types the twin does not cover (float, double, decimal, binary,
+    timestamp) are routed by one extra Spark job over the probe keys."""
     m = table.manifest(version)
     if not keys:
         return spark.createDataFrame([], m.schema)
@@ -1038,22 +1058,27 @@ def read_for_keys(
     # before typed stats, both sides were stringified, so callers passing
     # '42' against a bigint key silently worked — now that stats compare in
     # the column's domain, an uncoerced str-vs-int comparison would raise
-    # mid-prune. Parseable values are converted; garbage gets a clear error
-    # naming the column instead of a TypeError from a stat comparison.
-    from pyspark.sql.types import (
-        ByteType as _B, DoubleType as _D, FloatType as _F,
-        IntegerType as _I, LongType as _L, ShortType as _S,
-    )
-
+    # mid-prune. Parseable values are converted; garbage, and integers outside
+    # the column's range, get a clear error naming the column instead of a
+    # TypeError from a stat comparison or a struct.error from bucket routing.
     def _coerce_probe(v, col):
         dt = m.schema[col].dataType
         try:
             if isinstance(dt, StringType):
                 return v if isinstance(v, str) else str(v)
-            if isinstance(dt, (_B, _S, _I, _L)):
-                return v if isinstance(v, int) and not isinstance(v, bool) else int(v)
-            if isinstance(dt, (_F, _D)):
+            bits = _INT_BITS.get(type(dt))
+            if bits:
+                n = v if isinstance(v, int) and not isinstance(v, bool) else int(v)
+                if not -(1 << (bits - 1)) <= n < 1 << (bits - 1):
+                    raise ValueError(f"outside the {bits}-bit range")
+                return n
+            if isinstance(dt, (FloatType, DoubleType)):
                 return v if isinstance(v, float) else float(v)
+            if v is not None and (
+                isinstance(dt, BooleanType) and not isinstance(v, bool)
+                or isinstance(dt, DateType) and not isinstance(v, datetime.date)
+            ):
+                raise TypeError(type(v).__name__)
         except (TypeError, ValueError) as e:
             raise ValueError(
                 f"probe value {v!r} is not coercible to key column "
@@ -1076,20 +1101,25 @@ def read_for_keys(
             tuple(_coerce_probe(v, c) for v, c in zip(k, m.key_cols))
             for k in keys
         ]
-        probe_schema = ", ".join(
-            f"{c} {m.schema[c].dataType.simpleString()}" for c in m.key_cols
-        )
-        one = spark.createDataFrame([tuple(k) for k in keys], probe_schema)
+        probes = keys
     else:
-        key0 = m.key_cols[0]
-        keys = [_coerce_probe(k, key0) for k in keys]
-        one = spark.createDataFrame(
-            [(k,) for k in keys], f"{key0} {m.schema[key0].dataType.simpleString()}"
-        )
-    buckets = {
-        int(r[0])
-        for r in one.select(bucket_expr(m.key_cols, m.num_buckets)).collect()
-    }
+        keys = [_coerce_probe(k, m.key_cols[0]) for k in keys]
+        probes = [(k,) for k in keys]
+    key_types = [m.schema[c].dataType for c in m.key_cols]
+
+    def probe_df() -> DataFrame:
+        return spark.createDataFrame(probes, ", ".join(
+            f"{c} {dt.simpleString()}" for c, dt in zip(m.key_cols, key_types)
+        ))
+
+    buckets = {bucket_of(k, key_types, m.num_buckets) for k in probes}
+    if None in buckets:  # a key type without a driver-side twin
+        buckets = {
+            int(r[0])
+            for r in probe_df().select(
+                bucket_expr(m.key_cols, m.num_buckets)
+            ).collect()
+        }
     # Manifest min/max stats cover the FIRST key column, kept in their native
     # domain (str for string stats, int/float for numeric — _parquet_stats).
     # A file is range-prunable only when its stat type matches the key column's
@@ -1097,16 +1127,11 @@ def read_for_keys(
     # stringified numbers: '99' > '100') silently drops matching rows, so any
     # mismatch — including stats from pre-typed-stats manifests — falls back
     # to bucket pruning only for that file.
-    from pyspark.sql.types import (
-        ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType,
-    )
-
     key0 = m.key_cols[0]
     key_dt = m.schema[key0].dataType
     if isinstance(key_dt, StringType):
         stat_domain: type | tuple = str
-    elif isinstance(key_dt, (ByteType, ShortType, IntegerType, LongType,
-                             FloatType, DoubleType)):
+    elif isinstance(key_dt, (*_INT_BITS, FloatType, DoubleType)):
         stat_domain = (int, float)
     else:
         stat_domain = ()  # no sound stat comparison for this key type
@@ -1144,7 +1169,9 @@ def read_for_keys(
     # files), which is what Spark would rewrite a giant IN into anyway.
     MAX_EXPR_KEYS = 256
     if len(keys) > MAX_EXPR_KEYS:
-        df = base_df.join(F.broadcast(one), on=list(m.key_cols), how="left_semi")
+        df = base_df.join(
+            F.broadcast(probe_df()), on=list(m.key_cols), how="left_semi"
+        )
     else:
         if multi:
             # an OR of per-tuple conjunctions (isin cannot build struct

@@ -53,16 +53,30 @@ def test_drop_column_is_metadata_only_and_time_travel_keeps_it(spark, tmp_path):
 
 
 def test_drop_column_guards(spark, tmp_path):
+    """Only the engine's own columns are refused: a user column that merely
+    starts with "_" (``_score``, ``_rank``) is data, and can be dropped or
+    renamed. A rename's NEW name may not start with "_"."""
     pipe = _pipe(spark, tmp_path, name="g")
     pipe.apply_batch(
-        _batch(spark, [("a", 1, "I", [1], 1, "web")]), fence_token="b0"
+        _batch(spark, [("a", 1, "I", [1], 1, "web", 0.5, 7)],
+               ddl="doc_id string, lsn long, op string, tokens array<int>, "
+                   "n_tok int, source string, _score double, _rank int"),
+        fence_token="b0",
     )
     with pytest.raises(ValueError, match="key column"):
         pipe.target.drop_column("doc_id")
+    pipe.target.drop_column("_score")
+    assert "_score" not in pipe.final_state().columns
     with pytest.raises(ValueError, match="hidden"):
         pipe.target.drop_column("_lsn")
     with pytest.raises(ValueError, match="no such column"):
         pipe.target.drop_column("nope")
+    pipe.target.rename_column("_rank", "rank")
+    assert [r["rank"] for r in pipe.final_state().collect()] == [7]
+    with pytest.raises(ValueError, match="hidden"):
+        pipe.target.rename_column("_lsn", "lsn_copy")
+    with pytest.raises(ValueError, match="reserved"):
+        pipe.target.rename_column("source", "_source")
 
 
 def test_rename_column_reads_old_files_and_accepts_new_name(spark, tmp_path):

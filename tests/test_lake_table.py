@@ -100,6 +100,44 @@ def test_bucket_pruning_layout(spark, tmp_path):
         assert [r.b for r in buckets] == [f.bucket]
 
 
+def test_bucket_of_matches_bucket_expr(spark):
+    """The driver-side twin routes every key type it covers to the same bucket
+    as ``bucket_expr``: strings around XXH64's 32-byte stripe and its 8/4/1-byte
+    tails, integer extremes, booleans, dates, the composite keys the token
+    index and a (string, long) table use, and NULL components (which leave the
+    hash seed unchanged). The 2^31-1 modulus compares nearly the whole hash."""
+    import datetime
+
+    from concepts_pipeline_spark.lake.table import bucket_expr, bucket_of
+
+    values = {
+        "s": ["", "a", "héllo, 漢字 😀", "x" * 31, "y" * 32, "z" * 33, "w" * 45,
+              "é" * 35, None],
+        "i": [0, 1, -1, 2**31 - 1, -(2**31), 123456, None],
+        "l": [0, -1, 2**63 - 1, -(2**63), 2**40 + 3, None],
+        "b": [True, False, None],
+        "d": [datetime.date(1970, 1, 1), datetime.date(1969, 12, 31),
+              datetime.date(2024, 2, 29), datetime.date(1, 1, 1), None],
+        "j": [None, 0, 5, 63],
+    }
+    n = max(len(v) for v in values.values())
+    df = spark.createDataFrame(
+        [tuple(v[r % len(v)] for v in values.values()) for r in range(n)],
+        "s string, i int, l bigint, b boolean, d date, j int",
+    )
+    types = {f.name: f.dataType for f in df.schema.fields}
+    key_sets = [["s"], ["i"], ["l"], ["b"], ["d"], ["i", "j"], ["s", "l"]]
+    cases = [(ks, nb) for ks in key_sets for nb in (1, 7, 16, 2**31 - 1)]
+    got = df.select(
+        *df.columns,
+        *[bucket_expr(ks, nb).alias(f"__b{i}") for i, (ks, nb) in enumerate(cases)],
+    ).collect()
+    for r in got:
+        for i, (ks, nb) in enumerate(cases):
+            twin = bucket_of(tuple(r[c] for c in ks), [types[c] for c in ks], nb)
+            assert twin == r[f"__b{i}"], (ks, nb, r)
+
+
 def test_rollback_rewinds_state_and_fences(spark, tmp_path):
     """Rollback commits a NEW manifest referencing the old snapshot's files and
     restores its fence set — batches applied after the target can be replayed."""

@@ -54,11 +54,24 @@ def test_read_for_keys_prunes_and_matches(spark, tmp_path):
     pipe = build(spark, tmp_path)
     full = state(pipe.final_state())
     some = sorted(full)[:3] + ["definitely-missing"]
-    out = read_for_keys(spark, pipe.target, some)
+    # probe keys are routed to buckets on the driver: planning the lookup
+    # runs no Spark job, so the lookup is the one job that reads the rows
+    sc = spark.sparkContext
+    sc.setJobGroup("read_for_keys_jobs", "4-key lookup")
+    try:
+        out = read_for_keys(spark, pipe.target, some)
+        rows = (
+            out.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+            .select("doc_id", "tokens", "n_tok", "source").collect()
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("read_for_keys_jobs")) == 1
     got = {
         r["doc_id"]: (tuple(r["tokens"] or []), r["n_tok"], r["source"])
-        for r in out.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-        .select("doc_id", "tokens", "n_tok", "source").collect()
+        for r in rows
     }
     assert got == {k: full[k] for k in sorted(full)[:3]}
 
@@ -80,11 +93,15 @@ def test_read_for_keys_resolves_mor_deltas(spark, tmp_path):
 def test_read_for_keys_coerces_probe_domain(spark, tmp_path):
     """String probes against a numeric-keyed table are coerced into the key
     column's domain before bucket hashing and stat comparison (pre-typed-stats
-    behavior, restored deliberately); garbage probes get a clear error instead
-    of a TypeError mid-prune."""
+    behavior, restored deliberately); garbage probes, and integers outside the
+    column's range, get a clear error instead of a TypeError mid-prune or a
+    struct.error in bucket routing."""
+    import datetime
+
     import pytest
     from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType,
+        DateType, DoubleType, IntegerType, LongType, StringType, StructField,
+        StructType,
     )
 
     from concepts_pipeline_spark.lake import LakeTable
@@ -101,3 +118,29 @@ def test_read_for_keys_coerces_probe_domain(spark, tmp_path):
     assert got == {7: "v7", 9: "v9"}
     with pytest.raises(ValueError, match="not coercible"):
         read_for_keys(spark, t, ["not-a-number"])
+    with pytest.raises(ValueError, match="not coercible"):
+        read_for_keys(spark, t, [9, 2**63])  # outside bigint's range
+
+    # a double key component has no driver-side twin: such keys are routed
+    # by a Spark job, and still find exactly their rows
+    sch2 = StructType(
+        [
+            StructField("d", DateType(), False),
+            StructField("x", DoubleType(), False),
+            StructField("v", StringType(), True),
+        ]
+    )
+    day = datetime.date(2024, 1, 1)
+    t2 = LakeTable.create(str(tmp_path / "datedbl"), sch2, ["d", "x"], num_buckets=2)
+    t2.overwrite(spark.createDataFrame(
+        [(day + datetime.timedelta(days=i), i / 2, f"v{i}") for i in range(8)], sch2
+    ))
+    got = {
+        r["v"] for r in read_for_keys(
+            spark, t2, [(day, 0.0), (day + datetime.timedelta(days=3), 1.5),
+                        (day, 9.0)],
+        ).collect()
+    }
+    assert got == {"v0", "v3"}
+    with pytest.raises(ValueError, match="not coercible"):
+        read_for_keys(spark, t2, [("2024-01-01", 0.0)])
