@@ -799,13 +799,11 @@ class CdcPipeline:
 
     def final_state(self, include_hidden: bool = False) -> DataFrame:
         """The user-visible table: tombstones filtered, hidden columns dropped.
-        Under merge-on-read, deltas are LWW-resolved here (lake.merge.read_merged)."""
-        if self.strategy == "mor":
-            from ..lake.merge import read_merged
+        Merge-on-read deltas are LWW-resolved here (lake.merge.read_merged;
+        on a table without deltas it is the plain read)."""
+        from ..lake.merge import read_merged
 
-            df = read_merged(self.spark, self.target)
-        else:
-            df = self.target.read(self.spark)
+        df = read_merged(self.spark, self.target)
         live = df.filter(~F.coalesce(F.col(HIDDEN_DELETED), F.lit(False)))
         if include_hidden:
             return live

@@ -33,7 +33,7 @@ Spark-first shape (no UDF, no Python on the data path):
 Semantics: the rewrite is a logical no-op — the same live-rows-and-tombstones
 state, new physical order — committed with ``operation: "cluster"`` so the
 derived surfaces treat it exactly like compaction (empty CDF delta; the
-replica's manifest walk skips it outright, lake/replicate._MAINTENANCE_OPS).
+replica's manifest walk skips it outright, lake/diff.MAINTENANCE_OPS).
 MoR deltas are folded through the same hidden-LSN LWW as lake/merge.compact;
 tables without the hidden CDC columns (append-only logs) are rewritten as a
 pure multiset-preserving reorder.

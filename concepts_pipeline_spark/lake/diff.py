@@ -19,6 +19,7 @@ downstream incremental consumer must receive anyway.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,52 +29,72 @@ from .schema import conform
 from .table import (
     ALL_HIDDEN,
     HIDDEN_DELETED,
+    CommitConflict,
     LakeTable,
     Manifest,
+    fence_cursor,
     visible_fields,
 )
 
 
 # operations whose commits are logical no-ops by construction: their file
 # churn flags buckets in _changed_buckets, but the live state there is
-# byte-identical — a span walk can exclude them outright (the same set the
-# replica walk uses, lake/replicate._MAINTENANCE_OPS)
+# byte-identical — a span walk excludes them outright (data_steps). ONE
+# definition for the whole engine: a maintenance op added here is
+# maintenance for every follower.
 MAINTENANCE_OPS = frozenset({"compact", "rescale", "cluster"})
 
+# longest span the manifest walk reads version by version; past it one
+# endpoint diff (or one bucket-discovery job) beats O(span) driver reads
+_MAX_WALK = 64
 
-def span_data_buckets(
-    table: LakeTable, m_from: Manifest, m_to: Manifest, max_walk: int = 64
-) -> set[int] | None:
-    """Buckets changed by DATA commits in ``(from, to]`` — maintenance-only
-    churn excluded — or None when the cheap answer is unavailable (span too
-    long to walk manifests, an interior manifest expired, or a rescale inside
-    the span: bucket numbering changed mid-walk).
+
+def data_steps(
+    table: LakeTable, from_version: int, to_version: int
+) -> list[tuple[set[int], int]] | None:
+    """``(changed buckets, num_buckets)`` of each DATA commit in
+    ``(from, to]`` — maintenance commits skipped — or None when the cheap
+    answer is unavailable (an empty, reversed or over-long span, or an
+    expired interior manifest).
 
     Why this exists: a compaction / rescale / z-order rewrite inside a span
     touches EVERY bucket's file list, so the endpoint ``_changed_buckets``
     degrades to O(table) for a logically empty step. Excluding maintenance
-    steps is sound because their live state is identical on both sides —
-    any bucket they alone touched contributes only rows that cancel (sum
-    consumers) or classify as noop (join consumers). A bucket a DATA step
-    touched is always included, so no real change is ever missed."""
-    if not 0 < m_to.version - m_from.version <= max_walk:
+    steps is sound because their live state is identical on both sides;
+    a bucket a DATA step touched is always reported, so no real change is
+    ever missed. Each step carries the bucket count its ids mean something
+    under: a rescale inside the span renumbers buckets, and a data commit
+    never changes the count, so within one step the numbering agrees."""
+    if not 0 < to_version - from_version <= _MAX_WALK:
         # reversed/empty spans must fall back to the (symmetric) endpoint
-        # diff — an empty walk would report zero changes for a real inverse
-        # span
+        # diff — an empty walk would report zero changes for a real span
         return None
-    out: set[int] = set()
+    out: list[tuple[set[int], int]] = []
     try:
-        prev = m_from
-        for v in range(m_from.version + 1, m_to.version + 1):
+        prev = table.manifest(from_version)
+        for v in range(from_version + 1, to_version + 1):
             cur = table.manifest(v)
-            if cur.num_buckets != prev.num_buckets:
-                return None  # rescale inside the span: ids not comparable
             if (cur.summary or {}).get("operation") not in MAINTENANCE_OPS:
-                out |= _changed_buckets(prev, cur)
+                out.append((_changed_buckets(prev, cur), cur.num_buckets))
             prev = cur
     except OSError:
         return None  # interior manifest expired; endpoint diff still works
     return out
+
+
+def span_data_buckets(
+    table: LakeTable, m_from: Manifest, m_to: Manifest
+) -> set[int] | None:
+    """Buckets changed by DATA commits in ``(from, to]`` (see
+    :func:`data_steps`), or None when the walk cannot answer or the span's
+    bucket numbering is not the endpoints' (a rescale: ids not comparable)."""
+    nb = m_to.num_buckets
+    steps = data_steps(table, m_from.version, m_to.version)
+    if steps is None or m_from.num_buckets != nb:
+        return None
+    if any(snb != nb for _, snb in steps):
+        return None
+    return set().union(*(b for b, _ in steps))
 
 
 def _changed_buckets(m_from: Manifest, m_to: Manifest) -> set[int]:
@@ -90,13 +111,16 @@ def _changed_buckets(m_from: Manifest, m_to: Manifest) -> set[int]:
 
 
 def read_live(
-    spark: SparkSession, table: LakeTable, m: Manifest, buckets: set[int]
+    spark: SparkSession,
+    table: LakeTable,
+    m: Manifest,
+    buckets: set[int] | None = None,
 ) -> DataFrame:
     """Resolved live rows (MoR-aware, tombstones dropped, hidden columns
-    stripped) for a bucket subset of snapshot ``m`` — the shared "current
-    logical rows" reader used by snapshot_diff, predicate DML (lake/mutate),
-    and view recompute (lake/view)."""
-    files = [f for f in m.files if f.bucket in buckets]
+    stripped) of snapshot ``m`` — every bucket, or the ``buckets`` subset.
+    The shared "current logical rows" reader of snapshot_diff, predicate
+    DML (lake/mutate), and every follower's recompute/read."""
+    files = [f for f in m.files if buckets is None or f.bucket in buckets]
     if not files:
         from pyspark.sql.types import StructType
 
@@ -218,5 +242,46 @@ def snapshot_diff(
     )
 
 
-# backwards-compat private alias (read_live became public API)
-_read_live = read_live
+def follow(
+    base: LakeTable,
+    target: LakeTable,
+    prefix: str,
+    step: Callable[[int, int, str], bool],
+    up_to_version: int | None = None,
+    coalesce: bool = False,
+) -> int:
+    """Fold every base commit past ``target``'s fence cursor into ``target``
+    — the one refresh loop of every change-feed follower (lake/view,
+    lake/index, lake/replicate, lake/outbox). Returns the number of base
+    versions THIS call applied.
+
+    The goal is the base head (or ``up_to_version``). Each pass reads the
+    cursor — the highest ``prefix<v>`` fence on the target — and hands
+    ``step(cur, nxt, fence)`` one span ``(cur, nxt]``: the next version, or
+    the whole remainder with ``coalesce=True`` (one commit instead of N;
+    resume granularity coarsens to the span, exactly-once still holds via
+    the span-end fence). The step folds the span in ONE commit fenced
+    ``fence``, with no retry of its own, and returns whether it committed
+    (False: the fence was already there, or it found its span stale).
+
+    Concurrency: the cursor IS the fence state, so it moves in the same
+    atomic manifest swap as the data. A racing follower that commits first
+    makes this step's CAS fail with ``CommitConflict``, and the loop
+    re-derives the remaining span from the winner's cursor. A span fence
+    alone would NOT subsume interior versions: two followers with
+    overlapping spans would double-apply ± deltas, and a stale narrow span
+    applied after a wide one could resurrect a key the wide span saw
+    inserted and deleted. Re-deriving on conflict is what makes concurrent
+    stepwise and coalesced followers compose."""
+    goal = base.current_version() if up_to_version is None else up_to_version
+    applied = 0
+    while True:
+        cur = fence_cursor(target.manifest(), prefix)
+        if cur >= goal:
+            return applied
+        nxt = goal if coalesce else cur + 1
+        try:
+            if step(cur, nxt, f"{prefix}{nxt}"):
+                applied += nxt - cur
+        except CommitConflict:
+            continue  # a racer committed; re-derive the span from fences

@@ -43,6 +43,7 @@ from ..operators.substring import (
     duplicate_substring_spans,
     token_window_hashes,
 )
+from .diff import read_live
 from .table import LakeTable
 from .view import IncrementalAggView
 
@@ -132,13 +133,6 @@ class DupHashIndex:
             .select("win_hash")
         )
 
-    def _live_base(self, version: int | None = None) -> DataFrame:
-        from .diff import _read_live
-
-        m = self.base.manifest(version)
-        buckets = {f.bucket for f in m.files}
-        return _read_live(self.spark, self.base, m, buckets)
-
     def span_profile(self, docs: DataFrame | None = None) -> DataFrame:
         """Per-document duplication profile (n_tok, dup_tokens, n_spans,
         dup_frac) answered from MAINTAINED counts: ``docs`` may be any row
@@ -146,7 +140,9 @@ class DupHashIndex:
         at the index's applied version. Matches the batch
         ``duplicate_span_stats`` over the same snapshot exactly."""
         if docs is None:
-            docs = self._live_base(self.applied_version())
+            docs = read_live(
+                self.spark, self.base, self.base.manifest(self.applied_version())
+            )
         return duplicate_span_stats(
             docs,
             self.tokens_col,
@@ -161,7 +157,9 @@ class DupHashIndex:
         """Maximal duplicated spans for ``docs`` (default: the whole live
         base at the applied version), marked against maintained counts."""
         if docs is None:
-            docs = self._live_base(self.applied_version())
+            docs = read_live(
+                self.spark, self.base, self.base.manifest(self.applied_version())
+            )
         return duplicate_substring_spans(
             docs,
             self.tokens_col,

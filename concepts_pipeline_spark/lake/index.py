@@ -23,12 +23,13 @@ table of SHARDED POSTING LISTS:
   rows commit in the SAME atomic manifest swap as the new bits map — routing
   state can never disagree with stored data. Lookups stay point reads
   (``num_shards · 2^bits(token)`` keys); cold tokens stay at 2^0.
-- Maintenance is CDF-driven (same discipline as lake/view.py): per base
-  commit, diff with pre-images → exploded (token, doc_id) pairs → adds =
-  new∖old, dels = old∖new → ONE fenced merge in ``array_patch`` mode
-  (posting := sort(except(union(current, adds), dels))). The fence cursor
-  makes refresh resumable and exactly-once; maintenance commits fold as empty
-  diffs. Cost per commit: O(changed docs × tokens/doc), never a base re-scan.
+- Maintenance is CDF-driven, through the shared change-feed follower
+  (``lake/diff.follow``: fence cursor, stepwise or coalesced spans,
+  re-derive on a lost commit race): per span, diff with pre-images →
+  exploded (token, doc_id) pairs → adds = new∖old, dels = old∖new → ONE
+  fenced merge in ``array_patch`` mode (posting := sort(except(union(current,
+  adds), dels))). Maintenance commits fold as empty diffs. Cost per commit:
+  O(changed docs × tokens/doc), never a base re-scan.
 - Lookup is the engine's own stat-pruned point read: the slot keys
   bucket-prune to a handful of files; no scan of the index, let alone the
   base.
@@ -52,9 +53,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .diff import snapshot_diff
+from .diff import follow, read_live, snapshot_diff
 from .merge import merge_into, read_for_keys
-from .table import LakeTable
+from .table import CommitConflict, LakeTable, fence_cursor
 
 FENCE_PREFIX = "tix:"
 
@@ -159,9 +160,7 @@ class TokenIndex:
         ]
 
     def applied_version(self) -> int:
-        from .table import fence_cursor
-
-        return fence_cursor(self.table, FENCE_PREFIX)
+        return fence_cursor(self.table.manifest(), FENCE_PREFIX)
 
     def _pairs(self, d: DataFrame, tokens_col: str) -> DataFrame:
         """Distinct (token, doc_id) pairs from a diff side."""
@@ -230,80 +229,71 @@ class TokenIndex:
         split any posting cell the merge pushed past ``max_postings``.
 
         ``coalesce=True`` folds the whole unapplied span as ONE diff + ONE
-        fenced merge (same telescoping argument as IncrementalAggView: the
-        pair delta is NET membership change, old-at-span-start vs
+        fenced merge (the same telescoping argument as IncrementalAggView:
+        the pair delta is NET membership change, old-at-span-start vs
         new-at-span-end, so intermediate churn cancels — a token added then
-        removed inside the span patches nothing). A consumer that fell 1000
-        versions behind pays one diff over the span's changed buckets and one
-        merge instead of 1000 serial job chains; resume granularity coarsens
-        to the span (exactly-once still holds via the span-end fence), and
-        the concurrency discipline is the view's: max_retries=0 + re-derive
-        the remaining span from the fence cursor on CAS conflict."""
-        from .table import CommitConflict
-
-        target = (
-            self.base.current_version()
-            if up_to_version is None
-            else up_to_version
+        removed inside the span patches nothing). Loop and concurrency
+        discipline: ``lake/diff.follow``."""
+        return follow(
+            self.base, self.table, FENCE_PREFIX, self._step,
+            up_to_version, coalesce,
         )
+
+    def _step(self, cur: int, nxt: int, fence: str) -> bool:
         # bits may have advanced in another process — adopt the stored map
         self._bits = self._load_bits(self.table.manifest().properties)
-        applied = 0
-        while True:
-            cur = self.applied_version()
-            if cur >= target:
-                return applied
-            nxt = target if coalesce else cur + 1
-            # both sides of the pair union read the diff — persist it so the
-            # diff subtree runs once (the merge persists the patch itself)
-            d = snapshot_diff(
-                self.spark, self.base, cur, nxt, include_old=True
-            ).persist()
-            # oversize detection rides the merge's own write job (zero extra
-            # jobs): when the observed count is 0 the split probe — a full
-            # read of every touched bucket's postings — is skipped entirely.
-            # coalesce() because count_if over an empty merge result is NULL
-            # and Observation.get refuses null metric rows.
-            obs = (
-                {
-                    "oversized": F.coalesce(
-                        F.count_if(
-                            F.size("doc_ids") > int(self.max_postings)
-                        ),
-                        F.lit(0),
-                    )
-                }
-                if self.max_postings is not None
-                else None
+        # both sides of the pair union read the diff — persist it so the
+        # diff subtree runs once (the merge persists the patch itself)
+        d = snapshot_diff(
+            self.spark, self.base, cur, nxt, include_old=True
+        ).persist()
+        # oversize detection rides the merge's own write job (zero extra
+        # jobs): when the observed count is 0 the split probe — a full
+        # read of every touched bucket's postings — is skipped entirely.
+        # coalesce() because count_if over an empty merge result is NULL
+        # and Observation.get refuses null metric rows.
+        obs = (
+            {
+                "oversized": F.coalesce(
+                    F.count_if(F.size("doc_ids") > int(self.max_postings)),
+                    F.lit(0),
+                )
+            }
+            if self.max_postings is not None
+            else None
+        )
+        try:
+            stats = merge_into(
+                self.spark,
+                self.table,
+                self._patch_expr(d),
+                update_mode="array_patch",
+                patch_cols={"doc_ids": ("add_ids", "del_ids")},
+                fence_token=fence,
+                max_retries=0,
+                observe_aggs=obs,
             )
-            try:
+        finally:
+            d.unpersist(blocking=False)
+        if stats.skipped:
+            return False
+        if self.max_postings is not None:
+            ov = (stats.observed or {}).get("oversized")
+            # None = observation lost (empty-result quirk) — fall back to
+            # the probe, never assume zero
+            if ov is None or int(ov) > 0:
                 try:
-                    stats = merge_into(
-                        self.spark,
-                        self.table,
-                        self._patch_expr(d),
-                        update_mode="array_patch",
-                        patch_cols={"doc_ids": ("add_ids", "del_ids")},
-                        fence_token=f"{FENCE_PREFIX}{nxt}",
-                        max_retries=0 if coalesce else 2,
-                        observe_aggs=obs,
+                    self._split_oversized(
+                        {pb["bucket"] for pb in stats.by_bucket}
                     )
-                except CommitConflict:
-                    if coalesce:
-                        continue  # a racer committed; re-derive span from fences
-                    raise  # stepwise keeps merge_into's own retry contract
-            finally:
-                d.unpersist(blocking=False)
-            if not stats.skipped:
-                applied += nxt - cur
-                if self.max_postings is not None:
-                    ov = (stats.observed or {}).get("oversized")
-                    # None = observation lost (empty-result quirk) — fall back
-                    # to the probe, never assume zero
-                    if ov is None or int(ov) > 0:
-                        self._split_oversized(
-                            {pb["bucket"] for pb in stats.by_bucket}
-                        )
+                except CommitConflict as e:
+                    # the patch already committed: a split that exhausted its
+                    # retries is an error, not a lost step for follow to
+                    # re-derive
+                    raise RuntimeError(
+                        f"posting split after {fence} lost its commit race"
+                    ) from e
+        return True
 
     # ------------------------------------------------------------------
     # adaptive splitting
@@ -455,11 +445,8 @@ class TokenIndex:
         at = self.applied_version()
         n_live = self.base.count_live(at)
         if n_live is None:
-            from .diff import read_live
-
-            m = self.base.manifest(at)
             n_live = read_live(
-                self.spark, self.base, m, {f.bucket for f in m.files}
+                self.spark, self.base, self.base.manifest(at)
             ).count()
         n = F.lit(float(n_live))
         df_col = F.col("df").cast("double")
@@ -491,10 +478,7 @@ class TokenIndex:
     def recompute(self) -> DataFrame:
         """Declarative spec: distinct (token, doc_id) over the base's live
         rows (MoR-resolving reader)."""
-        from .diff import read_live
-
-        m = self.base.manifest()
-        live = read_live(self.spark, self.base, m, {f.bucket for f in m.files})
+        live = read_live(self.spark, self.base, self.base.manifest())
         return self._pairs(live, self.tokens_col)
 
     def max_cell_size(self) -> int:

@@ -113,10 +113,8 @@ def merge_into(
     table: LakeTable,
     source: DataFrame,
     op_col: str = "op",
-    delete_op: str = "D",
     update_mode: str = "replace",
     array_union_cols: list[str] | None = None,
-    evolve: bool = True,
     fence_token: str | None = None,
     lsn_col: str | None = None,
     touched_buckets: list[int] | None = None,
@@ -141,8 +139,8 @@ def merge_into(
     while True:
         try:
             return _merge_into_once(
-                spark, table, source, op_col, delete_op, update_mode,
-                array_union_cols, evolve, fence_token, lsn_col,
+                spark, table, source, op_col, update_mode,
+                array_union_cols, fence_token, lsn_col,
                 touched_buckets, touched_num_buckets, changes_table, strategy,
                 sum_cols, patch_cols, set_properties, observe_aggs,
             )
@@ -157,10 +155,8 @@ def _merge_into_once(
     table: LakeTable,
     source: DataFrame,
     op_col: str = "op",
-    delete_op: str = "D",
     update_mode: str = "replace",
     array_union_cols: list[str] | None = None,
-    evolve: bool = True,
     fence_token: str | None = None,
     lsn_col: str | None = None,
     touched_buckets: list[int] | None = None,
@@ -186,7 +182,8 @@ def _merge_into_once(
     crossed max_postings.
 
     ``source`` columns: table key columns + ``op_col`` + payload columns. Payload may be
-    a superset of the table schema (new columns) or widened — handled when evolve=True.
+    a superset of the table schema (new columns) or widened — the table schema evolves.
+    ``op_col`` value ``'D'`` marks a delete.
 
     Two merge disciplines:
 
@@ -235,7 +232,7 @@ def _merge_into_once(
         # fold the event LSN / op into the hidden columns before schema alignment
         source = (
             source.withColumn(HIDDEN_LSN, F.col(lsn_col).cast("long"))
-            .withColumn(HIDDEN_DELETED, F.col(op_col) == F.lit(delete_op))
+            .withColumn(HIDDEN_DELETED, F.col(op_col) == F.lit("D"))
             .drop(lsn_col)
         )
     # array_patch mode: the add/del instruction columns are merge INPUTS, not
@@ -250,28 +247,25 @@ def _merge_into_once(
             if f.name != op_col and f.name not in patch_srcs
         ]
     )
-    if evolve:
-        new_schema = evolve_schema(m.schema, payload_schema)
-        # name-based storage cannot resurrect-proof a re-added column the way
-        # Iceberg's field IDs can: old data files still hold the dropped
-        # column's bytes under the same name, so re-adding it would read stale
-        # values back. DROP records the name; re-adding is refused until a
-        # full rewrite clears the tombstone (lake/table.drop_column docstring).
-        dead = set((m.properties or {}).get("dropped_cols", []))
-        revived = {
-            f.name for f in new_schema.fields if f.name in dead
-        } - {f.name for f in m.schema.fields}
-        if revived:
-            from .schema import SchemaEvolutionError
+    new_schema = evolve_schema(m.schema, payload_schema)
+    # name-based storage cannot resurrect-proof a re-added column the way
+    # Iceberg's field IDs can: old data files still hold the dropped
+    # column's bytes under the same name, so re-adding it would read stale
+    # values back. DROP records the name; re-adding is refused until a
+    # full rewrite clears the tombstone (lake/table.drop_column docstring).
+    dead = set((m.properties or {}).get("dropped_cols", []))
+    revived = {
+        f.name for f in new_schema.fields if f.name in dead
+    } - {f.name for f in m.schema.fields}
+    if revived:
+        from .schema import SchemaEvolutionError
 
-            raise SchemaEvolutionError(
-                f"column(s) {sorted(revived)} were previously dropped; "
-                "re-adding the same name would resurrect stale values from "
-                "old data files (name-based storage) — rewrite the table or "
-                "pick a new name"
-            )
-    else:
-        new_schema = m.schema
+        raise SchemaEvolutionError(
+            f"column(s) {sorted(revived)} were previously dropped; "
+            "re-adding the same name would resurrect stale values from "
+            "old data files (name-based storage) — rewrite the table or "
+            "pick a new name"
+        )
     schema_json = new_schema.json()
     schemas = dict(m.schemas)
     if schema_json not in schemas.values():
@@ -379,7 +373,7 @@ def _merge_into_once(
     )
 
     is_matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-    is_delete = F.col(f"s.{op_col}") == F.lit(delete_op)
+    is_delete = F.col(f"s.{op_col}") == F.lit("D")
 
     acc_cols = set(sum_cols or [])
     if update_mode == "array_union":
@@ -958,15 +952,7 @@ def read_merged(spark: SparkSession, table: LakeTable, version: int | None = Non
     Buckets without deltas short-circuit (no aggregation); tombstones are KEPT
     (callers filter, same contract as the CoW read path)."""
     m = table.manifest(version)
-    delta_buckets = {f.bucket for f in m.files if f.kind == "delta"}
-    if not delta_buckets:
-        return table._read_files(spark, m, m.files)
-    clean = [f for f in m.files if f.bucket not in delta_buckets]
-    dirty = [f for f in m.files if f.bucket in delta_buckets]
-    resolved = resolve_rows(table._read_files(spark, m, dirty), m.key_cols)
-    if not clean:
-        return resolved
-    return table._read_files(spark, m, clean).unionByName(resolved)
+    return table._read_files_resolved(spark, m, m.files)
 
 
 def rescale_buckets(
@@ -1222,11 +1208,14 @@ def read_appended_since(
     return table._read_files(spark, m_to, new_files), m_to.version
 
 
+# lost manifest races a compaction re-plans through before it gives up
+_MAINTENANCE_RETRIES = 2
+
+
 def compact(
     spark: SparkSession,
     table: LakeTable,
     max_delta_files_per_bucket: int = 4,
-    max_retries: int = 2,
 ) -> int:
     """Fold buckets whose delta-file count exceeds the threshold back to a single
     base generation. Idempotent; concurrent writers are protected by the
@@ -1265,7 +1254,7 @@ def compact(
                 },
             )
         except CommitConflict:
-            if attempt >= max_retries:
+            if attempt >= _MAINTENANCE_RETRIES:
                 raise
             attempt += 1
             continue
@@ -1276,8 +1265,6 @@ def compact_tiered(
     spark: SparkSession,
     table: LakeTable,
     fanout: int = 4,
-    full_fold_ratio: float = 1.0,
-    max_retries: int = 2,
 ) -> dict:
     """Size-tiered MoR maintenance (LSM/STCS discipline) — the scale-safe
     replacement for :func:`compact`'s fixed-count trigger.
@@ -1296,8 +1283,8 @@ def compact_tiered(
       read-time base∪delta resolution is unchanged). Cost is O(the pile),
       never O(bucket); each byte is rewritten O(log_fanout(base/batch))
       times total.
-    - **full fold**: only when a bucket's accumulated delta rows reach
-      ``full_fold_ratio`` × its base rows does the base get rewritten —
+    - **full fold**: only when a bucket's accumulated delta rows reach its
+      base rows does the base get rewritten —
       by then the rewrite is proportional to the new bytes absorbed, so
       base rewrites are amortized O(1) per ingested byte.
 
@@ -1336,7 +1323,7 @@ def compact_tiered(
             brows = base_rows.get(b, 0)
             # the empty-base arm requires a pile deeper than the fanout so a
             # lone fresh delta is not re-folded every batch while tiny
-            if drows >= full_fold_ratio * brows and (
+            if drows >= brows and (
                 brows > 0 or len(pile) > fanout
             ):
                 fold_buckets.add(b)
@@ -1383,7 +1370,7 @@ def compact_tiered(
                 },
             )
         except CommitConflict:
-            if attempt >= max_retries:
+            if attempt >= _MAINTENANCE_RETRIES:
                 raise
             attempt += 1
             continue

@@ -39,18 +39,11 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .diff import read_live
 from .merge import HIDDEN_LSN, MergeStats, merge_into
 from .table import CommitConflict, LakeTable, Manifest, visible_fields
 
 DML_LSN_COL = "__dml_lsn"
-
-
-def _live_rows(spark: SparkSession, table: LakeTable, m: Manifest) -> DataFrame:
-    """Logical rows of snapshot ``m`` (MoR-resolved, tombstones dropped,
-    hidden cols stripped) — what the predicate ranges over."""
-    from .diff import read_live
-
-    return read_live(spark, table, m, {f.bucket for f in m.files})
 
 
 def _next_lsn(spark: SparkSession, table: LakeTable, m: Manifest) -> int:
@@ -119,7 +112,7 @@ def delete_where(
     def build(m: Manifest) -> DataFrame:
         visible = [f.name for f in visible_fields(m.schema)]
         payload = [c for c in visible if c not in m.key_cols]
-        matched = _live_rows(spark, table, m).filter(predicate)
+        matched = read_live(spark, table, m).filter(predicate)
         return matched.select(
             *m.key_cols,
             *[
@@ -166,7 +159,7 @@ def update_where(
             raise ValueError(
                 f"SET of unknown or hidden column(s) {sorted(unknown)}"
             )
-        matched = _live_rows(spark, table, m).filter(predicate)
+        matched = read_live(spark, table, m).filter(predicate)
         return matched.select(
             *[
                 (

@@ -17,9 +17,9 @@ it ``updated`` (the tombstone row was matched); no-op and stale events appear
 in neither.
 
 Scale shape: one snapshot diff per published version — O(changed buckets),
-the same cursor-fenced incremental walk as lake/replicate.py; a consumer that
-fell N commits behind ships N diffs, each exactly once (the cursor IS the
-outbox table's fence state).
+walked by the shared change-feed follower (lake/diff.follow) like every other
+derived table; a consumer that fell N commits behind ships N diffs, each
+exactly once (the cursor IS the outbox table's fence state).
 """
 
 from __future__ import annotations
@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, LongType, StructField, StructType
 
-from .diff import snapshot_diff
-from .table import CommitConflict, LakeTable, fence_cursor, visible_fields
+from .diff import follow, snapshot_diff
+from .table import LakeTable, fence_cursor, visible_fields
 
 FENCE_PREFIX = "obx:"
 
@@ -68,39 +68,29 @@ class CdfOutbox:
         )
 
     def cursor(self) -> int:
-        return fence_cursor(self.table, FENCE_PREFIX)
+        return fence_cursor(self.table.manifest(), FENCE_PREFIX)
 
-    def refresh(self, max_retries: int = 2) -> int:
+    def refresh(self) -> int:
         """Publish actions for every primary version past the cursor, one
-        fenced append per version (crash-resumable, replay-skipping). Returns
-        the number of versions published."""
-        head = self.primary.current_version()
-        start = self.cursor()
-        done = 0
-        for v in range(start + 1, head + 1):
-            d = snapshot_diff(self.spark, self.primary, v - 1, v)
-            rows = d.select(
-                *self.key_cols,
-                *[
-                    # post-image for insert/update; deletes carry NULLs (the
-                    # diff's from-side image is not part of the changelog)
-                    F.when(F.col("change_type") != "delete", F.col(c)).alias(c)
-                    for c in self.payload_cols
-                ],
-                F.col("change_type").alias("action"),
-                F.lit(v).cast("long").alias("version"),
-            )
-            attempt = 0
-            while True:
-                try:
-                    self.table.append(rows, fence_token=f"{FENCE_PREFIX}{v}")
-                    break
-                except CommitConflict:
-                    attempt += 1
-                    if attempt > max_retries:
-                        raise
-            done += 1
-        return done
+        fenced append per version (crash-resumable, replay-skipping; a lost
+        commit race re-derives from the winner's cursor — lake/diff.follow).
+        Returns the number of versions THIS call published."""
+        return follow(self.primary, self.table, FENCE_PREFIX, self._step)
+
+    def _step(self, cur: int, nxt: int, fence: str) -> bool:
+        d = snapshot_diff(self.spark, self.primary, cur, nxt)
+        rows = d.select(
+            *self.key_cols,
+            *[
+                # post-image for insert/update; deletes carry NULLs (the
+                # diff's from-side image is not part of the changelog)
+                F.when(F.col("change_type") != "delete", F.col(c)).alias(c)
+                for c in self.payload_cols
+            ],
+            F.col("change_type").alias("action"),
+            F.lit(nxt).cast("long").alias("version"),
+        )
+        return self.table.append(rows, fence_token=fence) is not None
 
     def read(self) -> DataFrame:
         return self.table.read(self.spark).select(

@@ -180,13 +180,14 @@ class Manifest:
         )
 
 
-def fence_cursor(table: "LakeTable", prefix: str) -> int:
-    """Highest integer suffix among fence tokens with ``prefix`` — the shared
-    refresh-cursor primitive of every CDF consumer (lake/view.py,
-    lake/index.py, lake/replicate.py): the cursor IS the fence state, so
-    resume/replay safety comes from the same atomic commit as the data."""
+def fence_cursor(m: Manifest, prefix: str) -> int:
+    """Highest integer suffix among ``m``'s fence tokens with ``prefix`` —
+    the refresh cursor of every change-feed follower (lake/diff.follow): the
+    cursor IS the fence state, so resume/replay safety comes from the same
+    atomic commit as the data. Taking the manifest, not the table, lets a
+    caller check the cursor on the exact snapshot it will CAS against."""
     best = 0
-    for tok in table.manifest().fence_tokens:
+    for tok in m.fence_tokens:
         if tok.startswith(prefix):
             try:
                 best = max(best, int(tok[len(prefix):]))
@@ -1294,8 +1295,10 @@ class LakeTable:
         return m
 
     def read_tag(self, spark: SparkSession, name: str) -> DataFrame:
+        """The tagged snapshot's rows, MoR deltas LWW-resolved (tombstones
+        kept, hidden columns included — the ``read_merged`` contract)."""
         m = self.tag_manifest(name)
-        return self._read_files(spark, m, m.files)
+        return self._read_files_resolved(spark, m, m.files)
 
     def list_tags(self) -> list[str]:
         d = os.path.join(self.path, TAG_DIR)

@@ -8,21 +8,21 @@ aggregate lake table maintained PURELY from the base's per-commit change
 surface (the changed buckets of each commit span, read at both endpoints via
 ``lake/diff.live_pair``), never by re-reading the whole base.
 
-Exactly-once without a side channel: each applied base version merges into
-the view table with fence token ``ivm:<v>``, and the refresh cursor IS the
-fence state — a crashed refresh resumes where it stopped, a replayed version
-short-circuits (the same mechanism that makes the CDC apply path idempotent).
-Version-by-version application keeps each delta merge exact: +row at the new
-snapshot, −row at the old, sum-accumulated via the merge's ``sum_cols`` (no
-read-modify-write of the view by the caller). Because the maintained
-aggregates are group homomorphisms, the delta needs NO per-key change
-classification: unchanged rows cancel in the ± sum, so the refresh plan is
-two changed-bucket scans feeding one partial aggregation — no join, and the
-only shuffle is the O(groups × partitions) combine (see ``_delta_span``).
+Exactly-once without a side channel: each applied base span merges into
+the view table with fence token ``ivm:<v>``, and the refresh loop is the
+shared change-feed follower (``lake/diff.follow``: fence cursor, stepwise or
+coalesced spans, re-derive on a lost commit race). Each step's delta merge
+is exact: +row at the new snapshot, −row at the old, sum-accumulated via the
+merge's ``sum_cols`` (no read-modify-write of the view by the caller).
+Because the maintained aggregates are group homomorphisms, the delta needs
+NO per-key change classification: unchanged rows cancel in the ± sum, so the
+refresh plan is two changed-bucket scans feeding one partial aggregation —
+no join, and the only shuffle is the O(groups × partitions) combine (see
+``_delta_span``).
 
 Maintenance commits on the base (compaction, bucket rescale, z-order
 cluster) produce an empty logical diff — and cost nothing to walk through:
-``live_pair``'s maintenance-aware span walk (diff.span_data_buckets)
+``live_pair``'s maintenance-aware span walk (diff.data_steps)
 excludes their all-bucket file churn outright, so a span containing one
 reads ZERO buckets instead of the whole table. A base ROLLBACK is
 forward-history (it commits a NEW version restoring the old state), so the
@@ -52,9 +52,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .diff import live_pair
+from .diff import follow, live_pair, read_live
 from .merge import merge_into
-from .table import LakeTable, visible_fields
+from .table import LakeTable, fence_cursor, visible_fields
 
 FENCE_PREFIX = "ivm:"
 
@@ -172,9 +172,7 @@ class IncrementalAggView:
 
     def applied_version(self) -> int:
         """Highest base version already folded into the view (fence state)."""
-        from .table import fence_cursor
-
-        return fence_cursor(self.table, FENCE_PREFIX)
+        return fence_cursor(self.table.manifest(), FENCE_PREFIX)
 
     def _delta_span(self, from_version: int, to_version: int) -> DataFrame:
         """±contribution rows between two base snapshots, JOIN-FREE.
@@ -237,60 +235,40 @@ class IncrementalAggView:
         fenced merge: per-commit deltas telescope exactly (the diff of v_a→v_c
         equals the sum of the per-version diffs — intermediate states cancel),
         so a consumer that fell 1000 versions behind pays one diff over the
-        span's changed buckets instead of 1000 diffs. Trade: coarser resume
-        granularity (a crash mid-span redoes the span; exactly-once still
-        holds via the span-end fence).
-
-        Concurrency: every step recomputes its span FROM THE CURRENT FENCE
-        CURSOR and commits with max_retries=0 — a racing refresher that lands
-        first makes this one's commit CAS-conflict, and the loop re-derives
-        the remaining span from the winner's state. A span fence alone would
-        NOT subsume interior versions (two refreshers with overlapping spans
-        would double-apply ± deltas); the recompute-on-conflict loop is what
-        makes concurrent stepwise/coalesced refreshers compose."""
-        from .table import CommitConflict
-
-        target = (
-            self.base.current_version()
-            if up_to_version is None
-            else up_to_version
+        span's changed buckets instead of 1000 diffs. Loop and concurrency
+        discipline: ``lake/diff.follow``."""
+        return follow(
+            self.base, self.table, FENCE_PREFIX, self._step,
+            up_to_version, coalesce,
         )
-        applied = 0
-        while True:
-            cur = self.applied_version()
-            if cur >= target:
-                return applied
-            nxt = target if coalesce else cur + 1
-            # a CLASSIC view table is small by construction (one row per
-            # grouping-column combination) — declare every bucket touched so
-            # the merge skips its bucket-discovery job (a persist + distinct
-            # + collect that would otherwise be the refresh's extra
-            # scheduling barrier). An EXPANDED view's group cardinality is
-            # unbounded (e.g. one row per distinct window hash) — declaring
-            # all buckets touched would rewrite the WHOLE index table on
-            # every refresh, O(index) instead of O(delta); let the merge
-            # discover the delta's actual buckets instead.
-            bucket_kwargs: dict = {}
-            if self._expand is None:
-                nb = self.table.manifest().num_buckets
-                bucket_kwargs = dict(
-                    touched_buckets=list(range(nb)),
-                    touched_num_buckets=nb,
-                )
-            try:
-                stats = merge_into(
-                    self.spark,
-                    self.table,
-                    self._delta_span(cur, nxt),
-                    sum_cols=["n_rows", *self.sum_cols],
-                    fence_token=f"{FENCE_PREFIX}{nxt}",
-                    max_retries=0,
-                    **bucket_kwargs,
-                )
-            except CommitConflict:
-                continue  # a racer committed; re-derive the span from fences
-            if not stats.skipped:
-                applied += nxt - cur
+
+    def _step(self, cur: int, nxt: int, fence: str) -> bool:
+        # a CLASSIC view table is small by construction (one row per
+        # grouping-column combination) — declare every bucket touched so
+        # the merge skips its bucket-discovery job (a persist + distinct
+        # + collect that would otherwise be the refresh's extra
+        # scheduling barrier). An EXPANDED view's group cardinality is
+        # unbounded (e.g. one row per distinct window hash) — declaring
+        # all buckets touched would rewrite the WHOLE index table on
+        # every refresh, O(index) instead of O(delta); let the merge
+        # discover the delta's actual buckets instead.
+        bucket_kwargs: dict = {}
+        if self._expand is None:
+            nb = self.table.manifest().num_buckets
+            bucket_kwargs = dict(
+                touched_buckets=list(range(nb)),
+                touched_num_buckets=nb,
+            )
+        stats = merge_into(
+            self.spark,
+            self.table,
+            self._delta_span(cur, nxt),
+            sum_cols=["n_rows", *self.sum_cols],
+            fence_token=fence,
+            max_retries=0,
+            **bucket_kwargs,
+        )
+        return not stats.skipped
 
     def read(self) -> DataFrame:
         """The live view: groups whose row count is positive (a group whose
@@ -304,11 +282,7 @@ class IncrementalAggView:
         bootstrap validation, post-rollback rebuilds, and tests). Uses the
         MoR-resolving reader — a raw ``LakeTable.read`` would double-count
         keys whose base row is shadowed by an uncompacted delta file."""
-        from .diff import _read_live
-
-        m = self.base.manifest(version)
-        buckets = {f.bucket for f in m.files}
-        df = _read_live(self.spark, self.base, m, buckets)
+        df = read_live(self.spark, self.base, self.base.manifest(version))
         if self._expand is not None:
             df = self._expand(df)
         return df.groupBy(*self.group_cols).agg(

@@ -21,13 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the hidden per-key register columns a partial-mode table stores
+# (lake/table.HIDDEN_*); the folds below produce and consume them
+_LSN, _DELETED, _COLV, _DLSN = "_lsn", "_deleted", "_colv", "_dlsn"
+
 
 def lww_latest(
     df: DataFrame,
     key_cols: list[str],
     lsn_col: str = "lsn",
     op_col: str | None = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Keep exactly one row per key: the greatest row under the total order above.
 
@@ -39,7 +42,7 @@ def lww_latest(
     order_struct = F.struct(
         F.col(lsn_col).alias("l"),
         (
-            F.when(F.col(op_col) == delete_op, F.lit(1)).otherwise(F.lit(0))
+            F.when(F.col(op_col) == "D", F.lit(1)).otherwise(F.lit(0))
             if op_col is not None
             else F.lit(0)
         ).alias("r"),
@@ -60,9 +63,6 @@ def lww_fold_partial(
     val_cols: list[str],
     lsn_col: str = "lsn",
     op_col: str = "op",
-    delete_op: str = "D",
-    colv_col: str = "_colv",
-    dlsn_col: str = "_dlsn",
 ) -> DataFrame:
     """Per-COLUMN LWW fold of a sparse change batch (column-level CDC).
 
@@ -78,13 +78,13 @@ def lww_fold_partial(
     - each ``val_cols`` column: the value from the highest-LSN event that set
       it AND is newer than the batch's last delete; NULL = no surviving
       assignment in this batch
-    - ``colv_col``: ``map<column, lsn>`` recording the LSN of each surviving
+    - ``_colv``: ``map<column, lsn>`` recording the LSN of each surviving
       assignment — the per-column version vector the merge needs to order
       column writes across out-of-order batches
-    - ``dlsn_col``: the batch's highest delete LSN (NULL if none) — the delete
+    - ``_dlsn``: the batch's highest delete LSN (NULL if none) — the delete
       barrier, carried so the merge can clear target columns older than it
     - ``lsn_col``: highest event LSN overall (the row version)
-    - ``op_col``: ``delete_op`` when the batch's net effect is a deleted row
+    - ``op_col``: ``'D'`` when the batch's net effect is a deleted row
       (last delete outranks the last upsert), else ``'U'``
 
     The barrier trick: within the batch, a column's winner is the max-LSN
@@ -96,7 +96,7 @@ def lww_fold_partial(
     Same-LSN duplicates resolve deterministically with ``lww_latest``'s total
     order (delete outranks upsert; residual full-row-hash tiebreak).
     """
-    is_del = F.col(op_col) == F.lit(delete_op)
+    is_del = F.col(op_col) == F.lit("D")
     lsn = F.col(lsn_col).cast("long")
     # residual tiebreak over the full row, as in lww_latest: equal-(lsn, op)
     # duplicates with different payloads pick the SAME winner on every replay
@@ -137,12 +137,12 @@ def lww_fold_partial(
     out += [
         F.map_from_entries(
             F.filter(F.array(*entries), lambda e: e["value"].isNotNull())
-        ).alias(colv_col),
-        F.col("__dl").alias(dlsn_col),
+        ).alias(_COLV),
+        F.col("__dl").alias(_DLSN),
         F.col("__ml").alias(lsn_col),
         F.when(
             dl >= F.coalesce(F.col("__ul"), F.lit(_NEG_LSN)),
-            F.lit(delete_op),
+            F.lit("D"),
         ).otherwise(F.lit("U")).alias(op_col),
     ]
     return g.select(*out)
@@ -152,10 +152,6 @@ def lww_fold_registers(
     df: DataFrame,
     key_cols: list[str],
     val_cols: list[str],
-    lsn_col: str = "_lsn",
-    deleted_col: str = "_deleted",
-    colv_col: str = "_colv",
-    dlsn_col: str = "_dlsn",
 ) -> DataFrame:
     """Merge per-key REGISTER rows (column-level CDC state rows carrying the
     ``_colv`` version vector + ``_dlsn`` delete barrier) into one resolved
@@ -182,26 +178,26 @@ def lww_fold_registers(
     the input's (order preserved) so union/write sites need no adaptation.
     """
     NEG = F.lit(_NEG_LSN)
-    deleted = F.coalesce(F.col(deleted_col), F.lit(False))
-    lsn = F.col(lsn_col)
+    deleted = F.coalesce(F.col(_DELETED), F.lit(False))
+    lsn = F.col(_LSN)
     # residual tiebreak (same-LSN register duplicates): xxhash64 refuses MAP
     # inputs, so hash the map's entry list instead (map_from_entries builds
     # _colv in deterministic val_cols order, so entry order is stable)
     rh = F.bitwise_not(
         F.xxhash64(
             *[
-                F.map_entries(F.col(c)) if c == colv_col else F.col(c)
+                F.map_entries(F.col(c)) if c == _COLV else F.col(c)
                 for c in df.columns
             ]
         )
     )
     row_barrier = F.greatest(
-        F.coalesce(F.col(dlsn_col), NEG), F.when(deleted, lsn).otherwise(NEG)
+        F.coalesce(F.col(_DLSN), NEG), F.when(deleted, lsn).otherwise(NEG)
     )
     row_upsert = F.when(~deleted, lsn).otherwise(NEG)
     aggs = []
     for c in val_cols:
-        lc = F.try_element_at(F.col(colv_col), F.lit(c))
+        lc = F.try_element_at(F.col(_COLV), F.lit(c))
         order_c = F.when(
             lc.isNotNull(), F.struct(lc.alias("l"), rh.alias("h"))
         )
@@ -228,13 +224,13 @@ def lww_fold_registers(
         entries.append(
             F.struct(F.lit(c).alias("key"), F.when(surv, w_l).alias("value"))
         )
-    exprs[lsn_col] = F.col("__ml")
-    exprs[deleted_col] = ~live
-    exprs[colv_col] = F.when(
+    exprs[_LSN] = F.col("__ml")
+    exprs[_DELETED] = ~live
+    exprs[_COLV] = F.when(
         live,
         F.map_from_entries(
             F.filter(F.array(*entries), lambda e: e["value"].isNotNull())
         ),
     )
-    exprs[dlsn_col] = F.when(B > NEG, B)
+    exprs[_DLSN] = F.when(B > NEG, B)
     return g.select(*[exprs[c].alias(c) for c in df.columns])

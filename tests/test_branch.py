@@ -204,6 +204,33 @@ def test_tag_pins_explicit_version(spark, tmp_path):
         t.create_tag("ghost", version=999)
 
 
+def test_tag_resolves_merge_on_read_deltas(spark, tmp_path):
+    """A tag over a merge-on-read table reads its snapshot's LOGICAL rows:
+    delta files LWW-resolve against the base, so a superseded base row and a
+    deleted key are not read back alongside the newest versions."""
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "mor"), TARGET_SCHEMA, ["doc_id"],
+        num_buckets=2, strategy="mor",
+    )
+    pipe.apply_batch(_events(spark, [("a", [1], 1, "s0", "I", 1),
+                                     ("b", [2], 1, "s0", "I", 2)]),
+                     fence_token="m0")
+    pipe.apply_batch(_events(spark, [("a", [1], 1, "s1", "U", 3),
+                                     ("b", None, None, None, "D", 4)]),
+                     fence_token="m1")
+    pipe.target.create_tag("release")
+    tagged = sorted(
+        (r["doc_id"], r["source"])
+        for r in pipe.target.read_tag(spark, "release")
+        .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+        .collect()
+    )
+    assert tagged == [("a", "s1")]
+    assert tagged == sorted(
+        (r["doc_id"], r["source"]) for r in pipe.final_state().collect()
+    )
+
+
 @pytest.fixture(scope="module")
 def wap_log(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("wap") / "log")

@@ -85,7 +85,7 @@ def test_ratio_gate_folds_to_base(spark, tmp_path):
     mor.apply_batch(spark.createDataFrame(
         [(f"k{i}", 100 + i, "U", [9, i], 2, "s") for i in range(20)], LOG),
         fence_token="b1")
-    r = compact_tiered(spark, mor.target, fanout=4, full_fold_ratio=1.0)
+    r = compact_tiered(spark, mor.target, fanout=4)
     assert set(r["folded"]) and not _delta_files(mor.target)
     got = state(mor.final_state())
     assert got["k3"] == ((9, 3), 2, "s")

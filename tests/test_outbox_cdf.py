@@ -102,3 +102,43 @@ def test_payload_changelog_reconstructs_state(spark, tmp_path):
     assert state == want == {
         "a": ([9, 9], 2, "s2"), "c": ([3], 1, "s"),
     }
+
+
+def test_outbox_refresh_rederives_after_losing_race(
+    spark, tmp_path, monkeypatch
+):
+    """An outbox refresher whose fenced append loses the commit race to a
+    second refresher on the same outbox re-derives from the winner's cursor:
+    it reports only the versions it published itself (none), and no action
+    is published twice."""
+    from concepts_pipeline_spark.lake.table import CommitConflict
+
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "t"), TARGET_SCHEMA, ["doc_id"], num_buckets=2,
+    )
+    b = lambda rows, tok: pipe.apply_batch(
+        spark.createDataFrame(rows, LOG), fence_token=tok)
+    b([(1, "I", "a", [1], 1, "s"), (2, "I", "b", [2], 1, "s")], "r:0")
+    b([(3, "U", "a", [9], 1, "s"), (4, "D", "b", None, None, None)], "r:1")
+    b([(5, "I", "c", [7], 1, "s")], "r:2")
+
+    path = str(tmp_path / "obx")
+    loser = CdfOutbox(spark, pipe.target, path)
+    winner = CdfOutbox(spark, pipe.target, path)
+    real = loser.table.append
+    state = {"fired": False}
+
+    def racing(df, fence_token=None):
+        if not state["fired"]:
+            state["fired"] = True
+            winner.refresh()  # publishes every version before the loser
+            raise CommitConflict("simulated lost manifest swap")
+        return real(df, fence_token=fence_token)
+
+    monkeypatch.setattr(loser.table, "append", racing)
+    assert loser.refresh() == 0
+    rows = [
+        (r["doc_id"], r["action"], int(r["version"]))
+        for r in loser.read().collect()
+    ]
+    assert len(rows) == len(set(rows)) == 5

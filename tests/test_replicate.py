@@ -420,3 +420,41 @@ def logical_wide(df):
         r["doc_id"]: (list(r["tokens"]), r["n_tok"], r["source"], r["extra"])
         for r in df.collect()
     }
+
+
+def test_replica_refresh_rederives_after_losing_race(
+    spark, tmp_path, monkeypatch
+):
+    """The diff+merge path (3 replica buckets against 2 primary ones: not
+    harmonic, so no mirror) loses its fenced merge to a second replicator on
+    the same path: it re-derives from the winner's cursor, applies nothing
+    itself, and the replica still equals the primary."""
+    import concepts_pipeline_spark.lake.replicate as repl_mod
+    from concepts_pipeline_spark.lake.table import CommitConflict
+
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "p"), TOKENS_SCHEMA, ["doc_id"], num_buckets=2,
+    )
+    for i, rows in enumerate([
+        [("a", 1, "I", [1], 1, "s"), ("b", 2, "I", [2], 1, "s")],
+        [("a", 3, "U", [9], 1, "s"), ("b", 4, "D", None, None, None)],
+        [("c", 5, "I", [7], 1, "t")],
+    ]):
+        pipe.apply_batch(_batch(spark, rows), fence_token=f"q{i}")
+    shared = str(tmp_path / "r")
+    loser = Replica(spark, pipe.target, shared, num_buckets=3)
+    winner = Replica(spark, pipe.target, shared, num_buckets=3)
+
+    real = repl_mod.merge_into
+    state = {"fired": False}
+
+    def racing(*a, **kw):
+        if not state["fired"]:
+            state["fired"] = True
+            winner.refresh()  # converges every version before the loser
+            raise CommitConflict("simulated lost manifest swap")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(repl_mod, "merge_into", racing)
+    assert loser.refresh() == 0
+    assert logical(loser.read()) == logical(pipe.final_state())

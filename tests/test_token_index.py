@@ -4,6 +4,7 @@ lookup, and the array_patch merge mode it rides on."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from concepts_pipeline_spark.cdc.apply import CdcPipeline
@@ -460,3 +461,41 @@ def test_merge_observe_aggs_contract(spark, tmp_path):
             spark, t2, src2, lsn_col="lsn", strategy="mor",
             observe_aggs={"n": F.count(F.lit(1))},
         )
+
+
+@pytest.mark.parametrize("coalesce", [False, True])
+def test_index_refresh_rederives_after_losing_race(
+    spark, tmp_path, monkeypatch, coalesce
+):
+    """A refresher whose fenced merge loses the commit race to a second
+    refresher on the same index re-derives its span from the winner's
+    cursor — stepwise and coalesced alike — instead of raising or folding
+    the winner's versions a second time."""
+    import concepts_pipeline_spark.lake.index as index_mod
+    from concepts_pipeline_spark.lake.table import CommitConflict
+
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "t"), TOKENS_SCHEMA, ["doc_id"], num_buckets=2,
+    )
+    for i in range(3):
+        pipe.apply_batch(
+            _batch(spark, [(f"k{i}", 10 + i, "I", [i, 100], 2, "s")]),
+            fence_token=f"b{i}",
+        )
+    path = str(tmp_path / "ix")
+    loser = TokenIndex(spark, pipe.target, path, num_shards=2, num_buckets=2)
+    winner = TokenIndex(spark, pipe.target, path, num_shards=2, num_buckets=2)
+
+    real = index_mod.merge_into
+    state = {"fired": False}
+
+    def racing(*a, **kw):
+        if not state["fired"]:
+            state["fired"] = True
+            winner.refresh()  # lands every version before the loser commits
+            raise CommitConflict("simulated lost manifest swap")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(index_mod, "merge_into", racing)
+    assert loser.refresh(coalesce=coalesce) == 0
+    assert pairs(loser.read_all()) == pairs(loser.recompute())
