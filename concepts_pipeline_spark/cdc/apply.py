@@ -69,7 +69,6 @@ def valid_event_expr(
     op_col: str = "op",
     tokens_col: str = "tokens",
     n_tok_col: str | None = "n_tok",
-    delete_op: str = "D",
     vocab_size: int = VOCAB_SIZE,
     partial: bool = False,
 ) -> F.Column:
@@ -90,8 +89,8 @@ def valid_event_expr(
     # (not true) for a NULL op, which would let a NULL-op event with a populated
     # after-image slip past every branch and be applied as a live upsert.
     expr = F.when(
-        op.isNull() | ~op.isin("I", "U", delete_op), F.lit("unknown_op")
-    ).when(op == delete_op, F.lit(None).cast("string"))  # deletes carry no payload
+        op.isNull() | ~op.isin("I", "U", "D"), F.lit("unknown_op")
+    ).when(op == "D", F.lit(None).cast("string"))  # deletes carry no payload
     if partial:
         if n_tok_col is not None:
             # orphan count: n_tok set while tokens is "no statement" — the

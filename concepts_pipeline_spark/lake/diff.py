@@ -63,8 +63,11 @@ def data_steps(
     steps is sound because their live state is identical on both sides;
     a bucket a DATA step touched is always reported, so no real change is
     ever missed. Each step carries the bucket count its ids mean something
-    under: a rescale inside the span renumbers buckets, and a data commit
-    never changes the count, so within one step the numbering agrees."""
+    under: a rescale inside the span renumbers buckets (and is skipped).
+    A DATA commit that changes the count (a rollback across a rescale
+    restores the old numbering) mixes two numberings inside one step's
+    ``_changed_buckets`` — no per-step answer exists, so the walk gives
+    None and the caller falls back to the endpoint diff."""
     if not 0 < to_version - from_version <= _MAX_WALK:
         # reversed/empty spans must fall back to the (symmetric) endpoint
         # diff — an empty walk would report zero changes for a real span
@@ -75,6 +78,8 @@ def data_steps(
         for v in range(from_version + 1, to_version + 1):
             cur = table.manifest(v)
             if (cur.summary or {}).get("operation") not in MAINTENANCE_OPS:
+                if cur.num_buckets != prev.num_buckets:
+                    return None  # data commit renumbered buckets: no step ids
                 out.append((_changed_buckets(prev, cur), cur.num_buckets))
             prev = cur
     except OSError:
@@ -263,6 +268,8 @@ def follow(
     the span-end fence). The step folds the span in ONE commit fenced
     ``fence``, with no retry of its own, and returns whether it committed
     (False: the fence was already there, or it found its span stale).
+    ``fence`` is always ``prefix + str(nxt)`` — the on-disk format the
+    cursor parses — so a step that builds it itself commits the same token.
 
     Concurrency: the cursor IS the fence state, so it moves in the same
     atomic manifest swap as the data. A racing follower that commits first

@@ -229,6 +229,7 @@ class Replica:
         if fence_cursor(m_r, FENCE_PREFIX) != cur:
             return False
         rnb = m_r.num_buckets
+        fence = f"{FENCE_PREFIX}{nxt}"  # follow's token for this span
         if any(f.bucket < 0 for f in m_r.files):
             return None
         m_p = self.primary.manifest(nxt)
@@ -248,7 +249,7 @@ class Replica:
             # maintenance-only span: advance the fence, carry every file
             self.table.commit(
                 m_r, list(m_r.files),
-                fence_token=f"{FENCE_PREFIX}{nxt}",
+                fence_token=fence,
                 summary={"operation": "replicate_mirror", "empty_span": True},
             )
             return True
@@ -303,7 +304,7 @@ class Replica:
         self.table.commit(
             m_r,
             passthrough + new_files,
-            fence_token=f"{FENCE_PREFIX}{nxt}",
+            fence_token=fence,
             summary={
                 "operation": "replicate_mirror",
                 "mirrored_buckets": len(tb_set),

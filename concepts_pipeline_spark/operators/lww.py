@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the hidden per-key register columns a partial-mode table stores
-# (lake/table.HIDDEN_*); the folds below produce and consume them
-_LSN, _DELETED, _COLV, _DLSN = "_lsn", "_deleted", "_colv", "_dlsn"
+# the hidden per-key register columns a partial-mode table stores; the
+# folds below produce and consume them
+from ..lake.table import HIDDEN_COLV, HIDDEN_DELETED, HIDDEN_DLSN, HIDDEN_LSN
 
 
 def lww_latest(
@@ -137,8 +137,8 @@ def lww_fold_partial(
     out += [
         F.map_from_entries(
             F.filter(F.array(*entries), lambda e: e["value"].isNotNull())
-        ).alias(_COLV),
-        F.col("__dl").alias(_DLSN),
+        ).alias(HIDDEN_COLV),
+        F.col("__dl").alias(HIDDEN_DLSN),
         F.col("__ml").alias(lsn_col),
         F.when(
             dl >= F.coalesce(F.col("__ul"), F.lit(_NEG_LSN)),
@@ -178,26 +178,27 @@ def lww_fold_registers(
     the input's (order preserved) so union/write sites need no adaptation.
     """
     NEG = F.lit(_NEG_LSN)
-    deleted = F.coalesce(F.col(_DELETED), F.lit(False))
-    lsn = F.col(_LSN)
+    deleted = F.coalesce(F.col(HIDDEN_DELETED), F.lit(False))
+    lsn = F.col(HIDDEN_LSN)
     # residual tiebreak (same-LSN register duplicates): xxhash64 refuses MAP
     # inputs, so hash the map's entry list instead (map_from_entries builds
     # _colv in deterministic val_cols order, so entry order is stable)
     rh = F.bitwise_not(
         F.xxhash64(
             *[
-                F.map_entries(F.col(c)) if c == _COLV else F.col(c)
+                F.map_entries(F.col(c)) if c == HIDDEN_COLV else F.col(c)
                 for c in df.columns
             ]
         )
     )
     row_barrier = F.greatest(
-        F.coalesce(F.col(_DLSN), NEG), F.when(deleted, lsn).otherwise(NEG)
+        F.coalesce(F.col(HIDDEN_DLSN), NEG),
+        F.when(deleted, lsn).otherwise(NEG),
     )
     row_upsert = F.when(~deleted, lsn).otherwise(NEG)
     aggs = []
     for c in val_cols:
-        lc = F.try_element_at(F.col(_COLV), F.lit(c))
+        lc = F.try_element_at(F.col(HIDDEN_COLV), F.lit(c))
         order_c = F.when(
             lc.isNotNull(), F.struct(lc.alias("l"), rh.alias("h"))
         )
@@ -224,13 +225,13 @@ def lww_fold_registers(
         entries.append(
             F.struct(F.lit(c).alias("key"), F.when(surv, w_l).alias("value"))
         )
-    exprs[_LSN] = F.col("__ml")
-    exprs[_DELETED] = ~live
-    exprs[_COLV] = F.when(
+    exprs[HIDDEN_LSN] = F.col("__ml")
+    exprs[HIDDEN_DELETED] = ~live
+    exprs[HIDDEN_COLV] = F.when(
         live,
         F.map_from_entries(
             F.filter(F.array(*entries), lambda e: e["value"].isNotNull())
         ),
     )
-    exprs[_DLSN] = F.when(B > NEG, B)
+    exprs[HIDDEN_DLSN] = F.when(B > NEG, B)
     return g.select(*[exprs[c].alias(c) for c in df.columns])

@@ -228,6 +228,44 @@ def test_view_heals_through_rollback_and_full_refresh_bootstraps(
     assert as_map(late.read()) == as_map(late.recompute()) == {"web": (2, 2)}
 
 
+def test_coalesced_refresh_across_rollback_over_rescale(spark, tmp_path):
+    """A rollback past a rescale is a DATA commit that restores the old
+    bucket count: its file diff mixes two bucket numberings, so the span
+    walk must not answer for it. A coalesced span over rescale + rollback
+    must still see the rolled-back key deleted."""
+    from concepts_pipeline_spark.lake.diff import span_data_buckets
+    from concepts_pipeline_spark.lake.merge import rescale_buckets
+    from concepts_pipeline_spark.lake.table import bucket_expr
+
+    # k: a key whose 4-bucket id has no 2-bucket twin (>= 2) and is not
+    # a's — the ids a mixed-numbering diff could report instead
+    cands = spark.createDataFrame(
+        [(f"k{i}",) for i in range(32)] + [("a",)], "doc_id string"
+    ).select("doc_id", bucket_expr(["doc_id"], 4).alias("b"))
+    b4 = {r["doc_id"]: r["b"] for r in cands.collect()}
+    k = next(d for d, b in sorted(b4.items()) if b >= 2 and b != b4["a"])
+
+    pipe = _pipe(spark, tmp_path, name="rr")
+    pipe.apply_batch(
+        _batch(spark, [("a", 1, "I", [1], 1, "web")]), fence_token="r0"
+    )
+    pipe.apply_batch(
+        _batch(spark, [(k, 2, "I", [1, 2], 2, "book")]), fence_token="r1"
+    )
+    view = _view(spark, pipe, tmp_path, name="vrr")
+    assert view.refresh() == 2
+    v_k = pipe.target.current_version()
+    rescale_buckets(spark, pipe.target, 2)
+    pipe.target.rollback(1)  # back to 4 buckets, k gone
+    v_rb = pipe.target.current_version()
+
+    m = pipe.target.manifest
+    got = span_data_buckets(pipe.target, m(v_k), m(v_rb))
+    assert got is None or b4[k] in got
+    assert view.refresh(coalesce=True) == v_rb - v_k
+    assert as_map(view.read()) == as_map(view.recompute()) == {"web": (1, 1)}
+
+
 def test_view_null_sums_count_as_zero_both_paths(spark, tmp_path):
     """A group whose summed column is entirely NULL reports 0 on BOTH the
     delta and recompute paths (NULL sums cannot round-trip through ± deltas)."""
