@@ -36,7 +36,7 @@ def cmd_ingest(args) -> dict:
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from .lake import LakeTable, merge_into
+    from .lake import LakeTable, merge_into, retry_on_conflict
     from .operators.framing import FrameOverflowError, bounded_frames
     from .operators.skos import filter_geographic_subdivisions, skos_transform
 
@@ -82,10 +82,11 @@ def cmd_ingest(args) -> dict:
         args.table, schema, ["authority", "identifier"],
         num_buckets=args.buckets, if_not_exists=True,
     )
-    stats = merge_into(
+    # the parsed lines do not depend on the table: a lost race re-runs as is
+    stats = retry_on_conflict(lambda: merge_into(
         spark, table, concepts.withColumn("op", F.lit("U")),
         fence_token=args.fence,
-    )
+    ))
     if obs is not None:
         if stats.skipped:
             n_overflow = 0  # fenced no-op merge never ran a job over the lines
@@ -100,7 +101,7 @@ def cmd_aggregate(args) -> dict:
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from .lake import LakeTable, merge_into
+    from .lake import LakeTable, merge_into, retry_on_conflict
     from .operators.extract import accumulate_catalogue_concepts, extract_concepts
 
     spark = _spark("cps-aggregate")
@@ -116,12 +117,12 @@ def cmd_aggregate(args) -> dict:
         args.table, schema, ["authority", "identifier_value"],
         num_buckets=args.buckets, if_not_exists=True,
     )
-    stats = merge_into(
+    stats = retry_on_conflict(lambda: merge_into(
         spark, table, concepts.withColumn("op", F.lit("U")),
         update_mode="array_union",
         array_union_cols=["canonical_ids", "ontology_types"],
         fence_token=args.fence,
-    )
+    ))
     return {"applied": stats.applied, "noop": stats.noop, "skipped": stats.skipped}
 
 

@@ -39,6 +39,8 @@ from ..lake.table import (
     HIDDEN_DELETED,
     HIDDEN_DLSN,
     HIDDEN_LSN,
+    CommitConflict,
+    retry_on_conflict,
     visible_fields,
 )
 from ..operators.lww import lww_fold_partial, lww_latest
@@ -287,7 +289,7 @@ class CdcPipeline:
             # aggregator/ConceptsAggregator.scala:120-124): only keys whose merge
             # action was inserted/updated/deleted, appended per batch
             # key cols nullable: the crash-recovery "outbox_hole" marker row
-            # (lake/merge.py fence-skip branch) carries NULL keys
+            # (_close_outbox_hole) carries NULL keys
             changes_schema = StructType(
                 [StructField(k, target_schema[k].dataType, True) for k in key_cols]
                 + [
@@ -307,8 +309,6 @@ class CdcPipeline:
         batch: DataFrame,
         fence_token: str,
         on_reject: str = "quarantine",
-        _update_mode: str | None = None,
-        _merge_max_retries: int = 2,
     ) -> ApplyResult:
         """Validate + LWW + fenced merge + lineage for one change batch.
 
@@ -316,7 +316,42 @@ class CdcPipeline:
         quarantine table and applies the rest — the data-pipeline-friendly
         contract; 'fail' raises :class:`BatchRejectedError` before ANY commit
         when the batch holds even one invalid event — the reference's
-        abort-the-bulk-request behavior (BulkUpdateFlow.scala:93-105)."""
+        abort-the-bulk-request behavior (BulkUpdateFlow.scala:93-105).
+
+        The events do not depend on the table, so a lost commit race re-runs
+        the whole apply against the winner's snapshot (``retry_on_conflict``);
+        a racer that applied the same fence turns the retry into a skip."""
+        return retry_on_conflict(
+            lambda: self._apply_batch_once(batch, fence_token, on_reject)
+        )
+
+    def _close_outbox_hole(self, fence_token: str) -> None:
+        """The outbox is appended AFTER the target commit, so a crash in
+        between leaves the target fenced but the outbox missing the batch's
+        rows. The per-key diff cannot be recomputed once the merge has
+        applied, so close the hole with an explicit fenced marker (no-op
+        when the rows or the marker already landed)."""
+        ct_fence = f"{fence_token}:c"
+        if self.changes is None or self.changes.has_fence_token(ct_fence):
+            return
+        self.changes.append_rows(
+            [{
+                **{k: None for k in self.key_cols},
+                "action": "outbox_hole",
+                "fence_token": fence_token,
+            }],
+            fence_token=ct_fence,
+        )
+
+    def _apply_batch_once(
+        self,
+        batch: DataFrame,
+        fence_token: str,
+        on_reject: str,
+        update_mode: str | None = None,
+    ) -> ApplyResult:
+        """One attempt of :meth:`apply_batch`; ``update_mode`` overrides the
+        table's mode for this batch (a full-snapshot sync)."""
         if on_reject not in ("quarantine", "fail"):
             raise ValueError("on_reject must be 'quarantine' or 'fail'")
         if self.target.has_fence_token(fence_token):
@@ -336,22 +371,7 @@ class CdcPipeline:
                     }],
                     fence_token=f"{fence_token}:l",
                 )
-            # same crash window for the outbox (appended after the target
-            # commit): close it with a fenced hole marker — the per-key diff
-            # cannot be recomputed once the merge has applied
-            if (
-                self.changes is not None
-                and self.strategy == "cow"
-                and not self.changes.has_fence_token(f"{fence_token}:c")
-            ):
-                self.changes.append_rows(
-                    [{
-                        **{k: None for k in self.key_cols},
-                        "action": "outbox_hole",
-                        "fence_token": fence_token,
-                    }],
-                    fence_token=f"{fence_token}:c",
-                )
+            self._close_outbox_hole(fence_token)
             return ApplyResult(
                 stats=MergeStats(skipped=True, version=self.target.current_version()),
                 rows_in=0,
@@ -435,7 +455,7 @@ class CdcPipeline:
             rows_in = probe["rows_in"]
             touched_buckets = [int(b) for b in probe["buckets"]]
 
-        if (_update_mode or self.update_mode) == "partial":
+        if (update_mode or self.update_mode) == "partial":
             # column-level CDC: per-COLUMN LWW fold (sparse after-images);
             # emits the _colv version vector + _dlsn barrier the merge needs.
             # Same shape as lww_latest's agg path: one hash aggregation with
@@ -467,18 +487,19 @@ class CdcPipeline:
             self.target,
             source,
             op_col=self.op_col,
-            update_mode=_update_mode or self.update_mode,
+            update_mode=update_mode or self.update_mode,
             array_union_cols=self.array_union_cols,
             fence_token=fence_token,
             lsn_col=self.lsn_col,
             touched_buckets=touched_buckets,
             touched_num_buckets=num_buckets,
-            # MoR appends deltas without reading the target, so per-key action
-            # classification (and thus the outbox) is only available under CoW
-            changes_table=self.changes if self.strategy == "cow" else None,
+            # set only under CoW (the constructor refuses it for MoR)
+            changes_table=self.changes,
             strategy=self.strategy,
-            max_retries=_merge_max_retries,
         )
+        if stats.skipped:
+            # a racer applied this fence since the check above
+            self._close_outbox_hole(fence_token)
 
         if self.lineage is not None and not stats.skipped:
             rows = [
@@ -507,12 +528,12 @@ class CdcPipeline:
 
         if self.auto_compact_max_deltas is not None and not stats.skipped:
             from ..lake.merge import compact_tiered
-            from ..lake.table import CommitConflict
 
             # opportunistic maintenance: the batch's merge is already
-            # committed, so a compaction CAS loss to a concurrent writer
-            # (DML, view/index refresher) must NOT surface as a failure of a
-            # successfully applied batch — the next batch retries compaction
+            # committed, so a compaction that keeps losing its CAS to
+            # concurrent writers (DML, view/index refresher) must NOT surface
+            # as a failure of a successfully applied batch — nor reach this
+            # statement's retry — the next batch retries compaction
             try:
                 compact_tiered(
                     self.spark, self.target,
@@ -528,9 +549,6 @@ class CdcPipeline:
         fence_token: str,
         audit,
         on_reject: str = "quarantine",
-        max_retries: int = 2,
-        _update_mode: str | None = None,
-        _merge_max_retries: int = 2,
     ) -> ApplyResult:
         """Write-audit-publish: stage the batch on a branch, audit the staged
         state, then fast-forward main — the Iceberg WAP pattern for CDC
@@ -546,8 +564,8 @@ class CdcPipeline:
         the data.
 
         Concurrency: a main commit landing between fork and publish makes the
-        publish non-fast-forward (CommitConflict) — the wrapper re-forks from
-        the new head and re-applies, same optimistic shape as merge_into.
+        publish non-fast-forward (CommitConflict) — the whole statement
+        re-forks from the new head and re-applies (``retry_on_conflict``).
 
         Quarantine/lineage rows written while staging persist even when the
         audit rejects: they are the audit trail of the ATTEMPT, not published
@@ -556,64 +574,69 @@ class CdcPipeline:
         No reference analogue (the reference's ES sink exposes every bulk
         write immediately); the audit hook is the engine-side home for the
         reference's index-level validation jobs."""
-        from ..lake.table import CommitConflict
+        return retry_on_conflict(
+            lambda: self._apply_batch_wap_once(
+                batch, fence_token, audit, on_reject
+            )
+        )
 
+    def _apply_batch_wap_once(
+        self,
+        batch: DataFrame,
+        fence_token: str,
+        audit,
+        on_reject: str,
+        update_mode: str | None = None,
+    ) -> ApplyResult:
+        """One attempt of :meth:`apply_batch_wap` (``update_mode``: see
+        :meth:`_apply_batch_once`)."""
         if self.changes is not None:
             # the outbox announces per-key actions to downstream consumers as
             # part of the merge itself — under WAP that would publish actions
             # for a batch the audit may still reject. Outbox pipes must apply
             # directly (or derive the outbox from snapshot_diff post-publish).
             raise ValueError("apply_batch_wap is incompatible with changes_path")
-        if self.target.has_fence_token(fence_token):
+        name = f"wap-{fence_token}"
+        main = self.target
+        if main.has_fence_token(fence_token):
             # crash between publish_branch and drop_branch leaves the staging
             # branch orphaned — it would pin every data file and manifest
             # shard it references against expire_snapshots forever. The fence
             # proves the publish landed, so the branch is garbage: drop it
             # best-effort before the no-op replay.
             try:
-                self.target.drop_branch(f"wap-{fence_token}")
+                main.drop_branch(name)
             except FileNotFoundError:
                 pass
-            return self.apply_batch(
-                batch, fence_token, on_reject=on_reject,
-                _update_mode=_update_mode,
+            return self._apply_batch_once(
+                batch, fence_token, on_reject, update_mode
             )
-        if self.target.branch_name is not None:
+        if main.branch_name is not None:
             raise ValueError("apply_batch_wap targets the main table view")
-        name = f"wap-{fence_token}"
-        main = self.target
-        attempt = 0
-        while True:
-            try:
-                # a crashed/stale attempt's branch forked from an older head —
-                # branch work is redoable (main's fence decides exactly-once),
-                # so always re-fork fresh
-                main.drop_branch(name)
-            except FileNotFoundError:
-                pass
-            branch = main.create_branch(name)
-            self.target = branch
-            try:
-                result = self.apply_batch(
-                    batch, fence_token, on_reject=on_reject,
-                    _update_mode=_update_mode,
-                    _merge_max_retries=_merge_max_retries,
-                )
-            finally:
-                self.target = main
-            if not audit(self.spark, branch, result):
-                main.drop_branch(name)
-                raise BatchAuditError(fence_token)
-            try:
-                main.publish_branch(name)
-            except CommitConflict:
-                attempt += 1
-                if attempt > max_retries:
-                    main.drop_branch(name)
-                    raise
-                continue
+        try:
+            # a crashed/stale attempt's branch forked from an older head —
+            # branch work is redoable (main's fence decides exactly-once),
+            # so always re-fork fresh
             main.drop_branch(name)
-            return result
+        except FileNotFoundError:
+            pass
+        branch = main.create_branch(name)
+        self.target = branch
+        try:
+            result = self._apply_batch_once(
+                batch, fence_token, on_reject, update_mode
+            )
+        finally:
+            self.target = main
+        if not audit(self.spark, branch, result):
+            main.drop_branch(name)
+            raise BatchAuditError(fence_token)
+        try:
+            main.publish_branch(name)
+        finally:
+            # published, or lost the fast-forward race (the retry re-forks)
+            main.drop_branch(name)
+        return result
 
     def sync_snapshot(
         self,
@@ -668,8 +691,6 @@ class CdcPipeline:
         """
         if null_means not in ("clear", "keep"):
             raise ValueError("null_means must be 'clear' or 'keep'")
-        from ..lake.table import CommitConflict
-
         key_cols = self.key_cols
         forced = (
             "replace"
@@ -681,15 +702,13 @@ class CdcPipeline:
         if missing_keys:
             raise ValueError(f"snapshot is missing key column(s) {missing_keys}")
 
-        # CommitConflict discipline (same as lake/mutate._apply_dml): the
-        # batch is DERIVED from a snapshot of the table (live keys, max LSN)
-        # — a retry that reused it after a concurrent commit would carry a
-        # duplicate LSN and a stale delete set (keys made live by the winner
-        # would silently survive a dump they are absent from). So the merge's
-        # internal same-batch retry is disabled and the WHOLE statement
-        # (LSN stamp, delete synthesis) recomputes per attempt here.
-        attempt = 0
-        while True:
+        # The batch is DERIVED from a snapshot of the table (live keys, max
+        # LSN) — a retry that reused it after a concurrent commit would carry
+        # a duplicate LSN and a stale delete set (keys made live by the
+        # winner would silently survive a dump they are absent from). So the
+        # WHOLE statement (LSN stamp, delete synthesis, apply) is the
+        # attempt retry_on_conflict re-runs, as in lake/mutate._apply_dml.
+        def once() -> ApplyResult:
             m = self.target.manifest()
             if lsn is not None:
                 L = lsn
@@ -744,24 +763,14 @@ class CdcPipeline:
                 .withColumn(self.op_col, F.lit("D"))
                 .withColumn(self.lsn_col, F.lit(L).cast("long"))
             )
-            try:
-                batch = ups.unionByName(dels)
-                if audit is not None:
-                    # WAP's own conflict retry must NOT re-stage the stale
-                    # derived batch either — recompute out here instead
-                    return self.apply_batch_wap(
-                        batch, fence_token, audit=audit, on_reject=on_reject,
-                        max_retries=0, _update_mode=forced,
-                        _merge_max_retries=0,
-                    )
-                return self.apply_batch(
-                    batch, fence_token, on_reject=on_reject,
-                    _update_mode=forced, _merge_max_retries=0,
+            batch = ups.unionByName(dels)
+            if audit is not None:
+                return self._apply_batch_wap_once(
+                    batch, fence_token, audit, on_reject, forced
                 )
-            except CommitConflict:
-                if attempt >= 2:
-                    raise
-                attempt += 1
+            return self._apply_batch_once(batch, fence_token, on_reject, forced)
+
+        return retry_on_conflict(once)
 
     def redrive_quarantine(
         self,

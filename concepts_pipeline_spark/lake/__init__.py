@@ -17,10 +17,11 @@ an Iceberg-style table format built from scratch:
   (the analogue of ES doc-version idempotence + the noop script).
 """
 
-from .table import LakeTable, CommitConflict
+from .table import LakeTable, CommitConflict, retry_on_conflict
 from .merge import merge_into, MergeStats
 from .diff import snapshot_diff
 
 __all__ = [
-    "LakeTable", "CommitConflict", "merge_into", "MergeStats", "snapshot_diff",
+    "LakeTable", "CommitConflict", "retry_on_conflict", "merge_into",
+    "MergeStats", "snapshot_diff",
 ]

@@ -54,7 +54,7 @@ from pyspark.sql.types import (
     ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType,
 )
 
-from .table import CommitConflict, LakeTable, Manifest, bucket_expr
+from .table import LakeTable, bucket_expr, retry_on_conflict
 
 _NUMERIC = (ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
 
@@ -153,7 +153,6 @@ def cluster_by(
     bits: int = 8,
     files_per_bucket: int = 4,
     sample_limit: int = 20000,
-    max_retries: int = 2,
 ) -> dict:
     """Rewrite the table z-ordered on ``cols`` and record them as
     ``stat_cols`` so every future commit keeps per-file min/max for them.
@@ -163,8 +162,9 @@ def cluster_by(
     range shuffle on (bucket, z), one bucketed write of
     ``num_buckets × files_per_bucket`` z-interval files, ONE manifest CAS
     commit carrying the updated properties atomically with the new layout.
-    Idempotent; a lost CAS race re-plans against the winner (maintenance must
-    never surface a conflict to the operator).
+    Idempotent; a lost CAS race re-plans against the winner
+    (``retry_on_conflict`` — maintenance must not surface a conflict to the
+    operator).
 
     Returns ``{"files": n, "cells": {col: n_cells}, "version": v}``.
     """
@@ -179,8 +179,8 @@ def cluster_by(
             f"bits ({bits}) x dims ({len(cols)}) must fit a signed long "
             "(<= 63 interleaved bits)"
         )
-    attempt = 0
-    while True:
+
+    def once() -> dict:
         m = table.manifest()
         schema_cols = {f.name for f in m.schema.fields}
         missing = [c for c in cols if c not in schema_cols]
@@ -231,25 +231,21 @@ def cluster_by(
             )
         finally:
             df.unpersist()
-        try:
-            committed = table.commit(
-                m,
-                new_files,
-                summary={
-                    "operation": "cluster",
-                    "cluster_by": list(cols),
-                    "files_removed": len(m.files),
-                    "files_added": len(new_files),
-                },
-                properties=props,
-            )
-        except CommitConflict:
-            if attempt >= max_retries:
-                raise
-            attempt += 1
-            continue
+        committed = table.commit(
+            m,
+            new_files,
+            summary={
+                "operation": "cluster",
+                "cluster_by": list(cols),
+                "files_removed": len(m.files),
+                "files_added": len(new_files),
+            },
+            properties=props,
+        )
         return {
             "files": len(new_files),
             "cells": {c: len(bounds[c]) + 1 for c in cols},
             "version": committed.version,
         }
+
+    return retry_on_conflict(once)

@@ -55,7 +55,7 @@ from pyspark.sql.types import (
 
 from .diff import follow, read_live, snapshot_diff
 from .merge import merge_into, read_for_keys
-from .table import CommitConflict, LakeTable, fence_cursor
+from .table import CommitConflict, LakeTable, fence_cursor, retry_on_conflict
 
 FENCE_PREFIX = "tix:"
 
@@ -270,7 +270,6 @@ class TokenIndex:
                 update_mode="array_patch",
                 patch_cols={"doc_ids": ("add_ids", "del_ids")},
                 fence_token=fence,
-                max_retries=0,
                 observe_aggs=obs,
             )
         finally:
@@ -320,16 +319,21 @@ class TokenIndex:
         shard space and rewrite its posting rows, atomically with the new
         ``shard_bits`` map. Loops because one doubling may not suffice for a
         token far past the bound; each pass re-reads REAL sizes, so the
-        procedure is idempotent across crashes with no extra fencing."""
-        splits = 0
-        buckets = set(touched_buckets)
-        for _ in range(_MAX_EXTRA_BITS):
+        procedure is idempotent across crashes with no extra fencing. Each
+        pass is one statement under ``retry_on_conflict``: a lost race
+        re-reads the stored map, the oversized tokens and their postings —
+        re-committing the losing pass's patch and map would overwrite a
+        racer's postings and splits."""
+
+        def split_pass(buckets: set[int]) -> tuple[int, set[int]] | None:
+            # (tokens split, buckets touched), or None when none is left
+            self._bits = self._load_bits(self.table.manifest().properties)
             tokens = [
                 t for t in self._oversized_tokens(buckets)
                 if self._bits.get(t, 0) < _MAX_EXTRA_BITS
             ]
             if not tokens:
-                return splits
+                return None
             old_bits = {t: self._bits.get(t, 0) for t in tokens}
             new_bits = {t: b + 1 for t, b in old_bits.items()}
 
@@ -376,8 +380,16 @@ class TokenIndex:
                 },
             )
             self._bits = bits_after
-            splits += len(tokens)
-            buckets = {pb["bucket"] for pb in stats.by_bucket}
+            return len(tokens), {pb["bucket"] for pb in stats.by_bucket}
+
+        splits = 0
+        buckets = set(touched_buckets)
+        for _ in range(_MAX_EXTRA_BITS):
+            done = retry_on_conflict(lambda: split_pass(buckets))
+            if done is None:
+                return splits
+            n, buckets = done
+            splits += n
         return splits
 
     # ------------------------------------------------------------------

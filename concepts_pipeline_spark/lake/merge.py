@@ -60,6 +60,7 @@ from .table import (  # the HIDDEN_* names stay importable from here
     Manifest,
     bucket_expr,
     bucket_of,
+    retry_on_conflict,
 )
 
 ACTION_COL = "__action"
@@ -103,51 +104,27 @@ class MergeStats:
 
 class OutboxAppendError(RuntimeError):
     """Outbox append exhausted its commit-conflict retries AFTER the target
-    merge committed. Deliberately not a CommitConflict: merge_into's optimistic
-    retry wrapper must not re-enter the merge (the fence would turn a healthy
+    merge committed. Deliberately not a CommitConflict: the statement's
+    retry must not re-enter the merge (the fence would turn a healthy
     applied batch into a spurious hole marker with skipped stats)."""
 
 
-def merge_into(
-    spark: SparkSession,
-    table: LakeTable,
-    source: DataFrame,
-    op_col: str = "op",
-    update_mode: str = "replace",
-    array_union_cols: list[str] | None = None,
-    fence_token: str | None = None,
-    lsn_col: str | None = None,
-    touched_buckets: list[int] | None = None,
-    touched_num_buckets: int | None = None,
-    changes_table: LakeTable | None = None,
-    strategy: str = "cow",
-    max_retries: int = 2,
-    sum_cols: list[str] | None = None,
-    patch_cols: dict[str, tuple[str, str]] | None = None,
-    set_properties: dict | None = None,
-    observe_aggs: dict | None = None,
-) -> MergeStats:
-    """Optimistic-concurrency wrapper: on CommitConflict (another writer won the
-    manifest swap) the merge re-reads the NEW snapshot and re-runs — correct
-    because the whole merge is computed against the manifest it read, the fence
-    check is repeated per attempt (a racing writer that already applied this
-    fence turns the retry into a skip), and already-written data files of the
-    losing attempt are unreferenced orphans (reclaimed by expire_snapshots)."""
-    from .table import CommitConflict
+def merge_into(*args, **kwargs) -> MergeStats:
+    """Apply a deduplicated change batch to ``table`` in ONE attempt — the
+    parameters and semantics are :func:`_merge_into_once`'s.
 
-    attempt = 0
-    while True:
-        try:
-            return _merge_into_once(
-                spark, table, source, op_col, update_mode,
-                array_union_cols, fence_token, lsn_col,
-                touched_buckets, touched_num_buckets, changes_table, strategy,
-                sum_cols, patch_cols, set_properties, observe_aggs,
-            )
-        except CommitConflict:
-            if attempt >= max_retries:
-                raise
-            attempt += 1
+    A lost manifest swap raises ``CommitConflict`` and nothing is retried
+    here: only the caller knows whether its batch was derived from the
+    losing snapshot. The engine's one rule (``table.retry_on_conflict``):
+    a statement retries at its top level, and only after re-deriving its
+    batch against the winner's snapshot. A batch independent of the table
+    (a CDC event batch, a CLI ingest) re-runs as is — the fence check is
+    repeated per attempt, so a racer that already applied this fence turns
+    the retry into a skip; a losing attempt's data files are unreferenced
+    orphans (reclaimed by expire_snapshots)."""
+    # the body keeps its own name: perfbench/trace.py counts merge attempts
+    # per merge_into call by patching it
+    return _merge_into_once(*args, **kwargs)
 
 
 def _merge_into_once(
@@ -207,24 +184,8 @@ def _merge_into_once(
         else None
     )
     if fence_token and fence_token in m.fence_tokens:
-        # Replayed batch. The outbox is appended AFTER the target commit, so a
-        # crash in between leaves the target fenced but the outbox missing its
-        # rows; the per-key diff cannot be recomputed (the merge already
-        # applied), so close the hole with an explicit fenced marker — the same
-        # recovery shape as the lineage table (cdc/apply.py apply_batch).
-        if changes_table is not None:
-            ct_fence = f"{fence_token}:c"
-            if not changes_table.has_fence_token(ct_fence):
-                changes_table.append_rows(
-                    [
-                        {
-                            **{k: None for k in m.key_cols},
-                            "action": "outbox_hole",
-                            "fence_token": fence_token,
-                        }
-                    ],
-                    fence_token=ct_fence,
-                )
+        # replayed batch; the caller closes any outbox hole it left
+        # (cdc/apply.py CdcPipeline._close_outbox_hole)
         return MergeStats(skipped=True, version=m.version)
 
     key_cols = m.key_cols
@@ -778,21 +739,18 @@ def _merge_into_once(
         # no outbox row is ever written for the losing attempt (the retry
         # recomputes both against the winner's snapshot), and the remaining
         # crash window (commit landed, outbox didn't) is closed by the fenced
-        # hole marker on replay — see the fence-skip branch at the top.
+        # hole marker on replay (CdcPipeline._close_outbox_hole).
         #
-        # The outbox append gets its OWN retry loop: letting its
-        # CommitConflict escape to merge_into's wrapper would re-enter the
-        # whole merge, hit the (now-present) target fence, and degrade the
-        # still-recomputable diff into a spurious hole marker while suppressing
-        # the batch's lineage row (skipped=True). Here the diff rows are still
-        # at hand — re-append against the outbox's new snapshot. On retry
-        # exhaustion raise OutboxAppendError (NOT CommitConflict) so the
-        # wrapper can't silently convert this healthy applied merge into a
-        # hole marker + skipped stats: the caller sees a distinct, retryable
+        # The outbox append retries on its own: the diff rows are derived
+        # from the TARGET snapshot just committed, not from the outbox's, so
+        # re-appending them against the outbox's new snapshot is sound.
+        # Letting its CommitConflict escape to the statement's retry would
+        # re-enter the whole merge, hit the (now-present) target fence, and
+        # degrade the still-recomputable diff into a spurious hole marker
+        # while suppressing the batch's lineage row — so exhaustion raises
+        # OutboxAppendError (NOT CommitConflict): a distinct, retryable
         # failure while the target commit stands.
         if changes_table is not None:
-            from .table import CommitConflict
-
             changed_keys = result.filter(
                 F.col(ACTION_COL).isin("inserted", "updated", "deleted")
             ).select(
@@ -800,21 +758,17 @@ def _merge_into_once(
                 F.col(ACTION_COL).alias("action"),
                 F.lit(fence_token).alias("fence_token"),
             )
-            for attempt in range(4):
-                try:
-                    changes_table.append(
-                        changed_keys,
-                        fence_token=f"{fence_token}:c" if fence_token else None,
-                    )
-                    break
-                except CommitConflict as e:
-                    if attempt == 3:
-                        raise OutboxAppendError(
-                            f"outbox append for fence {fence_token!r} lost "
-                            "the commit race 4 times; target merge IS "
-                            "committed — re-run to land the outbox rows (the "
-                            "fence-skip branch writes them or a hole marker)"
-                        ) from e
+            retry_on_conflict(
+                lambda: changes_table.append(
+                    changed_keys,
+                    fence_token=f"{fence_token}:c" if fence_token else None,
+                ),
+                give_up=lambda e: OutboxAppendError(
+                    f"outbox append for fence {fence_token!r} kept losing "
+                    "the commit race; target merge IS committed — re-run "
+                    "the batch to close the outbox with a hole marker"
+                ),
+            )
     finally:
         if src_persisted:
             src.unpersist()
@@ -1208,10 +1162,6 @@ def read_appended_since(
     return table._read_files(spark, m_to, new_files), m_to.version
 
 
-# lost manifest races a compaction re-plans through before it gives up
-_MAINTENANCE_RETRIES = 2
-
-
 def compact(
     spark: SparkSession,
     table: LakeTable,
@@ -1220,13 +1170,11 @@ def compact(
     """Fold buckets whose delta-file count exceeds the threshold back to a single
     base generation. Idempotent; concurrent writers are protected by the
     optimistic manifest commit, and a lost CAS race re-plans against the
-    winner's manifest (same discipline as merge_into — a concurrent DML or
+    winner's manifest (``retry_on_conflict`` — a concurrent DML or
     view-refresh commit landing mid-compaction must not surface as an error
     for maintenance work). Returns the number of compacted buckets."""
-    from .table import CommitConflict
 
-    attempt = 0
-    while True:
+    def once() -> int:
         m = table.manifest()
         per_bucket: dict[int, int] = {}
         for f in m.files:
@@ -1242,23 +1190,19 @@ def compact(
         )
         sid = table._current_schema_id(m)
         new_files = table.write_data_files(resolved, m, sid, kind="base")
-        try:
-            table.commit(
-                m,
-                keep_files + new_files,
-                summary={
-                    "operation": "compact",
-                    "buckets": sorted(targets),
-                    "files_removed": len(victim_files),
-                    "files_added": len(new_files),
-                },
-            )
-        except CommitConflict:
-            if attempt >= _MAINTENANCE_RETRIES:
-                raise
-            attempt += 1
-            continue
+        table.commit(
+            m,
+            keep_files + new_files,
+            summary={
+                "operation": "compact",
+                "buckets": sorted(targets),
+                "files_removed": len(victim_files),
+                "files_added": len(new_files),
+            },
+        )
         return len(targets)
+
+    return retry_on_conflict(once)
 
 
 def compact_tiered(
@@ -1302,11 +1246,9 @@ def compact_tiered(
     """
     import math
 
-    from .table import CommitConflict
-
     fanout = max(fanout, 2)  # log-base of the tier function
-    attempt = 0
-    while True:
+
+    def once() -> dict:
         m = table.manifest()
         base_rows: dict[int, int] = {}
         deltas: dict[int, list[DataFileEntry]] = {}
@@ -1357,24 +1299,20 @@ def compact_tiered(
             )
             new_files += table.write_data_files(resolved, m, sid, kind="base")
         keep = [f for f in m.files if f.path not in removed]
-        try:
-            table.commit(
-                m,
-                keep + new_files,
-                summary={
-                    "operation": "compact",
-                    "mode": "tiered",
-                    "buckets": sorted(fold_buckets | set(consolidate)),
-                    "files_removed": len(removed),
-                    "files_added": len(new_files),
-                },
-            )
-        except CommitConflict:
-            if attempt >= _MAINTENANCE_RETRIES:
-                raise
-            attempt += 1
-            continue
+        table.commit(
+            m,
+            keep + new_files,
+            summary={
+                "operation": "compact",
+                "mode": "tiered",
+                "buckets": sorted(fold_buckets | set(consolidate)),
+                "files_removed": len(removed),
+                "files_added": len(new_files),
+            },
+        )
         return {
             "consolidated": sorted(consolidate),
             "folded": sorted(fold_buckets),
         }
+
+    return retry_on_conflict(once)

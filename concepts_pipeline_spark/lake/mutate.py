@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .diff import read_live
 from .merge import HIDDEN_LSN, MergeStats, merge_into
-from .table import CommitConflict, LakeTable, Manifest, visible_fields
+from .table import LakeTable, Manifest, retry_on_conflict, visible_fields
 
 DML_LSN_COL = "__dml_lsn"
 
@@ -63,16 +63,15 @@ def _apply_dml(
     build_batch: Callable[[Manifest], DataFrame],
     fence_token: str | None,
     strategy: str,
-    max_retries: int = 2,
 ) -> MergeStats:
-    """Snapshot → stamp → merge, with the WHOLE statement inside the
-    optimistic-concurrency retry: a losing writer recomputes its matched
-    rows, SET expressions, and LSN stamp against the winner's snapshot (a
-    retry that reused the old batch would carry a duplicate LSN and stale
-    pre-images — lost updates with no error). Every snapshot read (schema
-    guards, live rows, max-LSN) is pinned to ONE manifest per attempt."""
-    attempt = 0
-    while True:
+    """Snapshot → stamp → merge, with the WHOLE statement inside
+    ``retry_on_conflict``: a losing writer recomputes its matched rows, SET
+    expressions, and LSN stamp against the winner's snapshot (a retry that
+    reused the old batch would carry a duplicate LSN and stale pre-images —
+    lost updates with no error). Every snapshot read (schema guards, live
+    rows, max-LSN) is pinned to ONE manifest per attempt."""
+
+    def once() -> MergeStats:
         m = table.manifest()
         batch = build_batch(m)
         has_lsn = any(f.name == HIDDEN_LSN for f in m.schema.fields)
@@ -86,16 +85,12 @@ def _apply_dml(
             raise ValueError(
                 "merge-on-read DML requires a CDC table (hidden _lsn)"
             )
-        try:
-            return merge_into(
-                spark, table, batch,
-                fence_token=fence_token, strategy=strategy,
-                max_retries=0, **kwargs,
-            )
-        except CommitConflict:
-            if attempt >= max_retries:
-                raise
-            attempt += 1
+        return merge_into(
+            spark, table, batch,
+            fence_token=fence_token, strategy=strategy, **kwargs,
+        )
+
+    return retry_on_conflict(once)
 
 
 def delete_where(

@@ -137,7 +137,6 @@ class Replica:
             batch,
             lsn_col="__repl_lsn",
             fence_token=fence,
-            max_retries=0,
             touched_buckets=tb,
             touched_num_buckets=rnb_seen if tb is not None else None,
         )

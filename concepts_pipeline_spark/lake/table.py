@@ -33,6 +33,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from functools import reduce
+from typing import Callable, TypeVar
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -93,6 +94,36 @@ def _shard_key(bucket: int, num_buckets: int) -> int:
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same version first (optimistic concurrency)."""
+
+
+# lost manifest races a statement re-derives through before it gives up
+COMMIT_ATTEMPTS = 3
+
+T = TypeVar("T")
+
+
+def retry_on_conflict(
+    attempt: Callable[[], T],
+    give_up: Callable[[CommitConflict], Exception] | None = None,
+) -> T:
+    """The engine's one commit-retry rule: run ``attempt`` until it does
+    not lose the manifest swap, at most ``COMMIT_ATTEMPTS`` times.
+
+    ``attempt`` is ONE whole statement — read the snapshot, derive the
+    batch, plan, commit — so every retry re-derives against the winner's
+    snapshot. Only the statement's top level retries, never a function
+    inside one that retries: an inner retry would re-commit a batch derived
+    from the losing snapshot (stale pre-images, a duplicate LSN stamp) —
+    lost updates with no error. Exhaustion re-raises the last conflict, or
+    ``give_up(conflict)`` when the caller must not look like a lost race."""
+    for n in range(1, COMMIT_ATTEMPTS + 1):
+        try:
+            return attempt()
+        except CommitConflict as e:
+            if n == COMMIT_ATTEMPTS:
+                if give_up is None:
+                    raise
+                raise give_up(e) from e
 
 
 @dataclass
@@ -1040,18 +1071,8 @@ class LakeTable:
 
     @staticmethod
     def files_where(m: Manifest, col: str, lo, hi) -> list[DataFileEntry]:
-        """Manifest-level file skipping on a payload column (Iceberg column
-        stats): keep a file iff its stored [min, max] for ``col`` can
-        intersect [lo, hi]. Files without stats for the column (older
-        generations, stats-incomplete footers, renamed columns) are KEPT —
-        pruning is an optimization, never a correctness filter. Comparison
-        only within the matching type domain (string stats never prune a
-        numeric probe and vice versa), mirroring read_for_keys."""
-        dirty = LakeTable._delta_buckets(m)
-        return [
-            f for f in m.files
-            if f.bucket in dirty or LakeTable._stats_may_match(f, col, lo, hi)
-        ]
+        """Single-range :meth:`files_where_all`."""
+        return LakeTable.files_where_all(m, [(col, lo, hi)])
 
     @staticmethod
     def _delta_buckets(m: Manifest) -> set:
@@ -1079,11 +1100,17 @@ class LakeTable:
     def files_where_all(
         m: Manifest, preds: list[tuple[str, object, object]]
     ) -> list[DataFileEntry]:
-        """AND-of-ranges file skipping: keep a file iff EVERY (col, lo, hi)
-        range can intersect its stats. On a z-ordered table (lake/cluster.py)
-        each file covers a small hyper-rectangle of the clustered dims, so a
-        multi-dimensional probe prunes multiplicatively — single-column stats
-        alone keep every file whose one dim happens to overlap."""
+        """Manifest-level file skipping on payload columns (Iceberg column
+        stats): keep a file iff EVERY (col, lo, hi) range can intersect its
+        stored [min, max]. Files without stats for a column (older
+        generations, stats-incomplete footers, renamed columns) are KEPT —
+        pruning is an optimization, never a correctness filter. Comparison
+        only within the matching type domain (string stats never prune a
+        numeric probe and vice versa), mirroring read_for_keys. On a
+        z-ordered table (lake/cluster.py) each file covers a small
+        hyper-rectangle of the clustered dims, so a multi-dimensional probe
+        prunes multiplicatively — single-column stats alone keep every file
+        whose one dim happens to overlap."""
         dirty = LakeTable._delta_buckets(m)
         return [
             f
@@ -1100,24 +1127,10 @@ class LakeTable:
         hi=None,
         version: int | None = None,
     ) -> DataFrame:
-        """Predicate read with manifest-level file skipping: scan only the
-        files whose ``col`` range (table property ``stat_cols``) can match,
-        then apply the exact filter. With time/source-clustered ingest this
-        skips whole files BEFORE any I/O — at 10^6-file scale that is the
-        difference between a metadata decision and opening every footer
-        (parquet row-group stats still prune inside the files that remain).
-        Raw physical rows (hidden CDC columns included) like ``read`` —
-        except on MoR manifests, where rows are LWW-resolved BEFORE the
-        filter (tombstones retained): filtering raw base∪delta rows would
-        silently revive a base row whose newer delta version left the probed
-        range. Buckets carrying deltas are never value-pruned at all (see
-        ``_delta_buckets`` — a delta may even be stale, so neither side of
-        the base∪delta pair can be cut on stats)."""
-        m = self.manifest(version)
-        hi = lo if hi is None else hi
-        files = self.files_where(m, col, lo, hi)
-        df = self._read_files_resolved(spark, m, files)
-        return df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
+        """Single-range :meth:`read_where_all` (``hi=None``: the point ``lo``)."""
+        return self.read_where_all(
+            spark, [(col, lo, lo if hi is None else hi)], version=version
+        )
 
     def _read_files_resolved(
         self, spark: SparkSession, m: Manifest, files: list[DataFileEntry]
@@ -1148,11 +1161,21 @@ class LakeTable:
         preds: list[tuple[str, object, object]],
         version: int | None = None,
     ) -> DataFrame:
-        """Conjunctive predicate read with multi-column manifest pruning
-        (files_where_all) — the read shape z-order clustering exists for.
-        The exact AND filter is re-applied after the file cut, so pruning
-        remains an optimization, never a correctness filter. MoR manifests
-        are LWW-resolved before the filter (see read_where)."""
+        """Conjunctive predicate read with manifest-level file skipping: scan
+        only the files whose ranges (table property ``stat_cols``) can match
+        every (col, lo, hi) — files_where_all, the read shape z-order
+        clustering exists for — then re-apply the exact AND filter. With
+        time/source-clustered ingest this skips whole files BEFORE any I/O —
+        at 10^6-file scale that is the difference between a metadata
+        decision and opening every footer (parquet row-group stats still
+        prune inside the files that remain). Raw physical rows (hidden CDC
+        columns included) like ``read`` — except on MoR manifests, where
+        rows are LWW-resolved BEFORE the filter (tombstones retained):
+        filtering raw base∪delta rows would silently revive a base row whose
+        newer delta version left the probed range. Buckets carrying deltas
+        are never value-pruned at all (see ``_delta_buckets`` — a delta may
+        even be stale, so neither side of the base∪delta pair can be cut on
+        stats)."""
         m = self.manifest(version)
         files = self.files_where_all(m, preds)
         df = self._read_files_resolved(spark, m, files)

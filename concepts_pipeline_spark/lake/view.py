@@ -265,7 +265,6 @@ class IncrementalAggView:
             self._delta_span(cur, nxt),
             sum_cols=["n_rows", *self.sum_cols],
             fence_token=fence,
-            max_retries=0,
             **bucket_kwargs,
         )
         return not stats.skipped

@@ -13,10 +13,23 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import functions as F
 
 from concepts_pipeline_spark.lake.merge import merge_into
+from concepts_pipeline_spark.lake.table import CommitConflict
 from tests.test_branch import SRC_SCHEMA, _events, _table
 
 N_WRITERS = 6
 BATCHES_PER_WRITER = 3
+
+
+def _merge_until_landed(*args, **kwargs):
+    """Six threads racing one table can lose more often than the engine's
+    retry bound; each batch here is independent of the table, so re-running
+    it after a lost race is sound."""
+    for _ in range(25):
+        try:
+            return merge_into(*args, **kwargs)
+        except CommitConflict:
+            pass
+    return merge_into(*args, **kwargs)
 
 
 def test_parallel_writers_all_land_exactly_once(spark, tmp_path):
@@ -29,9 +42,9 @@ def test_parallel_writers_all_land_exactly_once(spark, tmp_path):
             rows = [
                 (f"w{w}k{k}", [lsn], 1, "s", "U", lsn) for k in range(5)
             ]
-            merge_into(
+            _merge_until_landed(
                 spark, t, _events(spark, rows),
-                fence_token=f"w{w}:{b}", lsn_col="lsn", max_retries=25,
+                fence_token=f"w{w}:{b}", lsn_col="lsn",
             )
         return w
 
@@ -57,8 +70,6 @@ def test_parallel_writers_all_land_exactly_once(spark, tmp_path):
 def test_writers_race_branch_publish(spark, tmp_path):
     """A branch staged mid-contention publishes IFF main did not move — and
     the loser path (CommitConflict) never corrupts either chain."""
-    from concepts_pipeline_spark.lake.table import CommitConflict
-
     t = _table(spark, tmp_path, num_buckets=2)
     merge_into(spark, t, _events(spark, [("base", [0], 1, "s", "U", 1)]),
                fence_token="b:0", lsn_col="lsn")
@@ -67,8 +78,10 @@ def test_writers_race_branch_publish(spark, tmp_path):
                fence_token="b:1", lsn_col="lsn")
 
     def racer():
-        merge_into(spark, t, _events(spark, [("racer", [9], 1, "s", "U", 9)]),
-                   fence_token="r:0", lsn_col="lsn", max_retries=25)
+        _merge_until_landed(
+            spark, t, _events(spark, [("racer", [9], 1, "s", "U", 9)]),
+            fence_token="r:0", lsn_col="lsn",
+        )
         return True
 
     with ThreadPoolExecutor(max_workers=1) as ex:

@@ -1,4 +1,4 @@
-"""Optimistic-concurrency retry: a losing manifest swap re-runs the merge
+"""Optimistic-concurrency retry: a losing manifest swap re-runs the statement
 against the winner's snapshot and still applies exactly once."""
 
 from __future__ import annotations
@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from concepts_pipeline_spark.lake import LakeTable, merge_into
-from concepts_pipeline_spark.lake.table import CommitConflict, Manifest
+from concepts_pipeline_spark.lake.table import (
+    CommitConflict,
+    Manifest,
+    retry_on_conflict,
+)
 
 SCHEMA_DDL = "doc_id string, v int"
 
@@ -44,8 +48,11 @@ def test_conflict_retry_applies_once(spark, tmp_path, monkeypatch):
         return real_write(self, m, base=base)
 
     monkeypatch.setattr(LakeTable, "_write_manifest", racing_write)
-    stats = merge_into(spark, t, src(spark, [("a", 2, "U"), ("b", 9, "U")]),
-                       fence_token="m:1")
+    # the batch does not depend on the table: the statement retries as is
+    stats = retry_on_conflict(lambda: merge_into(
+        spark, t, src(spark, [("a", 2, "U"), ("b", 9, "U")]),
+        fence_token="m:1",
+    ))
     monkeypatch.undo()
 
     assert fired["n"] == 1  # conflict actually happened
@@ -64,8 +71,7 @@ def test_conflict_exhausts_retries(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(LakeTable, "_write_manifest", always_conflict)
     with pytest.raises(CommitConflict):
-        merge_into(spark, t, src(spark, [("a", 1, "U")]),
-                   fence_token="m:0", max_retries=1)
+        merge_into(spark, t, src(spark, [("a", 1, "U")]), fence_token="m:0")
 
 
 def test_cluster_conflict_retry_replans_against_winner(spark, tmp_path,
@@ -143,3 +149,59 @@ def test_cluster_crash_before_commit_leaves_orphans_only(spark, tmp_path,
     # a later cluster succeeds cleanly on the intact table
     cluster_by(spark, t, ["v"], bits=3)
     assert {tuple(r) for r in t.read(spark).collect()} == before
+
+
+@pytest.mark.parametrize("case", ["sync", "sync_audit", "compact_tiered"])
+def test_statement_rederives_after_lost_race(spark, tmp_path, monkeypatch,
+                                             case):
+    """A statement whose batch is derived from the table loses its commit
+    race to a racer that lands between derive and commit; the retry must
+    re-derive against the winner. A sync must delete the key the racer made
+    live (the dump lacks it; a reused batch would keep it alive), and a
+    tiered compaction must fold the racer's delta (a reused plan would drop
+    its file)."""
+    from concepts_pipeline_spark.cdc.apply import CdcPipeline
+    from concepts_pipeline_spark.lake.merge import compact_tiered
+    from tests.test_lake_table import TOKENS_SCHEMA
+    from tests.test_snapshot_sync import EV_DDL, SNAP_DDL
+
+    def pipe():
+        return CdcPipeline(
+            spark, str(tmp_path / "t"), TOKENS_SCHEMA, ["doc_id"],
+            num_buckets=1,
+            strategy="mor" if case == "compact_tiered" else "cow",
+        )
+
+    writer, racer = pipe(), pipe()
+    events = [("a", 1, "U", [1], 1, "s"), ("b", 2, "U", [2], 1, "s"),
+              ("a", 3, "U", [3], 1, "s")]
+    for i, e in enumerate(events):  # one delta file each under MoR
+        writer.apply_batch(spark.createDataFrame([e], EV_DDL), f"b{i}")
+    race = ("z", 50, "U", [7], 1, "r")
+
+    real_commit = LakeTable.commit
+    fired = {"n": 0}
+
+    def racing_commit(self, base, files, **kw):
+        op = (kw.get("summary") or {}).get("operation")
+        if not fired["n"] and self.path == writer.target.path and (
+            kw.get("fence_token") == "sync" or op == "compact"
+        ):
+            fired["n"] += 1
+            racer.apply_batch(spark.createDataFrame([race], EV_DDL), "racer")
+        return real_commit(self, base, files, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit", racing_commit)
+    if case == "compact_tiered":
+        assert compact_tiered(spark, writer.target, fanout=2)["folded"] == [0]
+        want = {"a": [3], "b": [2], "z": [7]}  # LWW over every event
+    else:
+        snap = spark.createDataFrame([("a", [9], 1, "snap")], SNAP_DDL)
+        audit = (lambda s, br, r: True) if case == "sync_audit" else None
+        writer.sync_snapshot(snap, "sync", audit=audit)
+        want = {"a": [9]}  # b and the racer's z are absent from the dump
+    monkeypatch.undo()
+
+    assert fired["n"] == 1  # the statement's first attempt really lost
+    got = {r["doc_id"]: list(r["tokens"]) for r in writer.final_state().collect()}
+    assert got == want

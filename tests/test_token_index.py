@@ -499,3 +499,53 @@ def test_index_refresh_rederives_after_losing_race(
     monkeypatch.setattr(index_mod, "merge_into", racing)
     assert loser.refresh(coalesce=coalesce) == 0
     assert pairs(loser.read_all()) == pairs(loser.recompute())
+
+
+def test_split_rederives_after_losing_race(spark, tmp_path, monkeypatch):
+    """A posting split that loses its commit race to a second refresher
+    re-reads the stored shard map and the current postings: the racer's
+    posting for the hot token and the racer's own split both survive (a
+    retry of the losing split's patch and map would overwrite both)."""
+    import json
+
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "t"), TOKENS_SCHEMA, ["doc_id"], num_buckets=2,
+    )
+    pipe.apply_batch(
+        _batch(spark, [(f"k{i}", i, "I", [100], 1, "s") for i in range(10)]),
+        fence_token="b0",
+    )
+    path = str(tmp_path / "ix")
+    loser, racer = (
+        TokenIndex(spark, pipe.target, path, num_shards=2, num_buckets=2,
+                   max_postings=4)
+        for _ in range(2)
+    )
+
+    real_commit = LakeTable.commit
+    fired = {"n": 0}
+
+    def racing_commit(self, base, files, **kw):
+        split = self.path == path and kw.get("fence_token") is None
+        if split and not fired["n"]:
+            fired["n"] += 1
+            # one more posting for the hot token, and a second hot token
+            pipe.apply_batch(
+                _batch(spark, [("n", 20, "I", [100], 1, "s")] + [
+                    (f"r{i}", 21 + i, "I", [200], 1, "s") for i in range(10)
+                ]),
+                fence_token="b1",
+            )
+            racer.refresh()  # folds b1 and splits both hot tokens first
+        return real_commit(self, base, files, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit", racing_commit)
+    assert loser.refresh() == 1
+    monkeypatch.undo()
+
+    assert fired["n"] == 1  # the split's first attempt really lost
+    assert pairs(loser.read_all()) == pairs(loser.recompute())
+    bits = json.loads(loser.table.manifest().properties["shard_bits"])
+    assert {"100", "200"} <= set(bits)  # both writers' splits
+    assert pairs(loser.lookup([100, 200])) == pairs(loser.recompute())
+    assert loser.max_cell_size() <= 4
